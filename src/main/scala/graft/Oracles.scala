@@ -1,11 +1,16 @@
 package graft
 
+import graft.operators.Folds
+
 /** DuckDB oracle SQL for every SQL-expressible query in SparkEntry.
   *
   * Discipline (SURVEY.md §5): identical column names and integer widths as
   * the Spark side, RE2-safe regexes only, every float rounded identically,
-  * sequential folds (list_reduce mirrors functions.aggregate) so doubles
-  * are bit-identical, ties broken by deterministic keys.
+  * ties broken by deterministic keys. Every value-sorted double sum is
+  * [[Folds.sortedSumSql]] and every sub-bucket fan-out is
+  * [[Folds.DefaultBuckets]]; the [[Folds]] scaladoc is the contract
+  * between the two twins, including where they differ (NULL terms,
+  * empty input).
   */
 object Oracles {
 
@@ -81,13 +86,13 @@ object Oracles {
   val logregWeightCtes: String = {
     val rounds = (1 to 3).map { k =>
       val prev = if (k == 1) "w0" else s"w${k - 1}"
-      s"""z$k AS (SELECT vec_id, y, list_reduce(list_sort(list(round(w * x, 9))), (a, b) -> a + b) AS z
+      s"""z$k AS (SELECT vec_id, y, ${Folds.sortedSumSql("round(w * x, 9)")} AS z
          |       FROM x JOIN $prev USING (i) GROUP BY 1, 2),
          |e$k AS (SELECT vec_id, round(1.0 / (1.0 + exp(-z)), 6) - y AS e FROM z$k),
-         |gs$k AS (SELECT i, vec_id % 1024 AS sb,
-         |       list_reduce(list_sort(list(round(e * x, 9))), (a, b) -> a + b) AS sub
+         |gs$k AS (SELECT i, vec_id % ${Folds.DefaultBuckets} AS sb,
+         |       ${Folds.sortedSumSql("round(e * x, 9)")} AS sub
          |       FROM x JOIN e$k USING (vec_id) GROUP BY i, sb),
-         |g$k AS (SELECT i, round(list_reduce(list_sort(list(sub)), (a, b) -> a + b) / n_vecs, 9) AS g
+         |g$k AS (SELECT i, round(${Folds.sortedSumSql("sub")} / n_vecs, 9) AS g
          |       FROM gs$k CROSS JOIN nd GROUP BY i, n_vecs),
          |w$k AS (SELECT i, round(w - 1.0 * coalesce(g, 0.0), 9) AS w FROM $prev LEFT JOIN g$k USING (i))""".stripMargin
     }.mkString(",\n")
@@ -128,9 +133,9 @@ object Oracles {
          |    FROM v JOIN $c USING (sub))) WHERE rn = 1)""".stripMargin
     def recenter(a: String, m: String, c: String) =
       s"""$m AS (SELECT sub, code, pos,
-         |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-         |  FROM (SELECT sub, code, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-         |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+         |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+         |  FROM (SELECT sub, code, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+         |        ${Folds.sortedSumSql("x")} AS sub_s
          |        FROM (SELECT vec_id, sub, code, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
          |        GROUP BY sub, code, pos, sb)
          |  GROUP BY sub, code, pos),
@@ -250,11 +255,11 @@ object Oracles {
     (1 to rounds).map { k =>
       val prev = s"p${k - 1}"
       s"""d$k AS (SELECT d.item,
-         |  list_reduce(list_sort(list(round(n_ij / (pi.rating + pj.rating), 9))), (a, b) -> a + b) AS denom
+         |  ${Folds.sortedSumSql("round(n_ij / (pi.rating + pj.rating), 9)")} AS denom
          |  FROM dir d JOIN $prev pi ON pi.item = d.item JOIN $prev pj ON pj.item = d.opp GROUP BY 1),
          |u$k AS (SELECT i.item, round(coalesce(w.n_wins, 0) / d$k.denom, 9) AS u
          |  FROM items i LEFT JOIN wins w ON w.item = i.item JOIN d$k ON d$k.item = i.item),
-         |t$k AS (SELECT list_reduce(list_sort(list(u)), (a, b) -> a + b) AS tot, count(*) AS ni FROM u$k),
+         |t$k AS (SELECT ${Folds.sortedSumSql("u")} AS tot, count(*) AS ni FROM u$k),
          |p$k AS (SELECT item, round(u * ni / tot, 9) AS rating FROM u$k CROSS JOIN t$k)""".stripMargin
     }.mkString(",\n")
 
@@ -320,9 +325,9 @@ object Oracles {
          |per3 AS (SELECT support, prec, rec,
          |  CASE WHEN prec + rec > 0 THEN 2.0 * prec * rec / (prec + rec) ELSE 0.0 END AS f1 FROM per2)
          |SELECT round(CAST(correct AS DOUBLE) / total, 6) AS accuracy,
-         |  round((SELECT list_reduce(list_sort(list(prec * support / total)), (a, b) -> a + b) FROM per3), 6) AS weighted_precision,
-         |  round((SELECT list_reduce(list_sort(list(rec * support / total)), (a, b) -> a + b) FROM per3), 6) AS weighted_recall,
-         |  round((SELECT list_reduce(list_sort(list(f1 * support / total)), (a, b) -> a + b) FROM per3), 6) AS weighted_f1
+         |  round((SELECT ${Folds.sortedSumSql("prec * support / total")} FROM per3), 6) AS weighted_precision,
+         |  round((SELECT ${Folds.sortedSumSql("rec * support / total")} FROM per3), 6) AS weighted_recall,
+         |  round((SELECT ${Folds.sortedSumSql("f1 * support / total")} FROM per3), 6) AS weighted_f1
          |FROM tot""".stripMargin,
 
     "nb_scratch" ->
@@ -403,7 +408,7 @@ object Oracles {
     // Theil T inequality of per-customer spend: 9dp terms, two-level
     // sub-bucketed sorted folds
     "spend_theil" ->
-      """WITH pc AS (SELECT o_custkey,
+      s"""WITH pc AS (SELECT o_custkey,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sc
         |  FROM orders GROUP BY 1),
         |mu AS (SELECT count(*) AS n, CAST(sum(sc) AS BIGINT) AS tot FROM pc),
@@ -412,16 +417,16 @@ object Oracles {
         |    round((CAST(sc AS DOUBLE) * n / tot) * ln(CAST(sc AS DOUBLE) * n / tot), 9)
         |  ELSE 0.0 END AS t
         |  FROM pc CROSS JOIN mu),
-        |sub AS (SELECT n, o_custkey % 1024 AS sb,
-        |  list_reduce(list_sort(list(t)), (a, b) -> a + b) AS sub_s
+        |sub AS (SELECT n, o_custkey % ${Folds.DefaultBuckets} AS sb,
+        |  ${Folds.sortedSumSql("t")} AS sub_s
         |  FROM terms GROUP BY 1, 2)
         |SELECT CAST(n AS BIGINT) AS n_customers,
-        |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / n, 6) AS theil_t
+        |  round(${Folds.sortedSumSql("sub_s")} / n, 6) AS theil_t
         |FROM sub GROUP BY n""".stripMargin,
 
     // Theil within/between decomposition by market segment
     "spend_theil_decomp" ->
-      """WITH pc AS (SELECT o.o_custkey,
+      s"""WITH pc AS (SELECT o.o_custkey,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sc,
         |  max(c.c_mktsegment) AS segment
         |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -435,11 +440,11 @@ object Oracles {
         |      * ln(CAST(sc AS DOUBLE) * n_g / tot_g), 9)
         |  ELSE 0.0 END AS t
         |  FROM pc JOIN seg USING (segment)),
-        |sub AS (SELECT segment, o_custkey % 1024 AS sb,
-        |  list_reduce(list_sort(list(t)), (a, b) -> a + b) AS sub_s
+        |sub AS (SELECT segment, o_custkey % ${Folds.DefaultBuckets} AS sb,
+        |  ${Folds.sortedSumSql("t")} AS sub_s
         |  FROM terms GROUP BY 1, 2),
         |w AS (SELECT segment,
-        |  list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) AS s
+        |  ${Folds.sortedSumSql("sub_s")} AS s
         |  FROM sub GROUP BY 1)
         |SELECT w.segment, CAST(seg.n_g AS BIGINT) AS n_customers,
         |  round(CAST(tot_g AS DOUBLE) / tot, 6) AS spend_share,
@@ -859,8 +864,8 @@ object Oracles {
          |SELECT doc_id, count(*) AS n_trigrams,
          |  CAST(sum(CASE WHEN lvl = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff1,
          |  CAST(sum(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff2,
-         |  round(list_reduce(list_sort(list(logs)), (a, b) -> a + b), 6) AS sum_logs,
-         |  round(round(list_reduce(list_sort(list(logs)), (a, b) -> a + b), 6) / count(*), 6) AS mean_logs
+         |  round(${Folds.sortedSumSql("logs")}, 6) AS sum_logs,
+         |  round(round(${Folds.sortedSumSql("logs")}, 6) / count(*), 6) AS mean_logs
          |FROM sc GROUP BY 1""".stripMargin,
 
     // inter-arrival regularity: whole-second gaps keep moments in
@@ -1091,13 +1096,13 @@ object Oracles {
     // temperature-scaled mixture weights: sqrt is exactly rounded IEEE,
     // so the T=2 chain is bit-deterministic cross-engine
     "mixture_temperature" ->
-      """WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+      s"""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
         |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total FROM c),
         |w AS (SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
         |      round(CAST(n_docs AS DOUBLE) / total, 9) AS share,
         |      round(sqrt(CAST(n_docs AS DOUBLE) / total), 9) AS w_raw
         |      FROM c CROSS JOIN t),
-        |z AS (SELECT list_reduce(list_sort(list(w_raw)), (a, b) -> a + b) AS z FROM w)
+        |z AS (SELECT ${Folds.sortedSumSql("w_raw")} AS z FROM w)
         |SELECT source, n_docs, share, round(w_raw / z, 6) AS w_temp,
         |  round(w_raw / z / share, 6) AS boost
         |FROM w CROSS JOIN z""".stripMargin,
@@ -1158,12 +1163,12 @@ object Oracles {
         sb.append(s"v${tag}0 AS (SELECT 'START' AS state, CAST(1.0 AS DOUBLE) AS mass),\n")
         for (i <- 1 to steps) {
           sb.append(
-            s"""s$tag$i AS (SELECT dst, round(list_reduce(list_sort(list(m)), (a, b) -> a + b), 9) AS mass
+            s"""s$tag$i AS (SELECT dst, round(${Folds.sortedSumSql("m")}, 9) AS mass
                |  FROM (SELECT t.dst, round(v.mass * t.p, 9) AS m
                |        FROM v$tag${i - 1} v JOIN t$tag t ON t.src = v.state) GROUP BY dst),
                |v$tag$i AS (SELECT dst AS state, mass FROM s$tag$i WHERE dst NOT IN ('CONV', 'NULL')),\n""".stripMargin)
         }
-        sb.append(s"g$tag AS (SELECT coalesce(round(list_reduce(list_sort(list(mass)), (a, b) -> a + b), 9), 0.0) AS pconv FROM (")
+        sb.append(s"g$tag AS (SELECT coalesce(round(${Folds.sortedSumSql("mass")}, 9), 0.0) AS pconv FROM (")
         sb.append((1 to steps).map(i => s"SELECT mass FROM s$tag$i WHERE dst = 'CONV'")
           .mkString(" UNION ALL "))
         sb.append("))")
@@ -1199,7 +1204,7 @@ object Oracles {
          |  CASE WHEN gB.pconv > 0 THEN round(1.0 - rem.removal_pconv / gB.pconv, 6)
          |       ELSE 0.0 END AS removal_effect
          |  FROM rem CROSS JOIN gB),
-         |se AS (SELECT round(list_reduce(list_sort(list(removal_effect)), (a, b) -> a + b), 9) AS sum_eff FROM eff)
+         |se AS (SELECT round(${Folds.sortedSumSql("removal_effect")}, 9) AS sum_eff FROM eff)
          |SELECT eff.channel, eff.base_pconv, eff.removal_pconv, eff.removal_effect,
          |  CASE WHEN se.sum_eff > 0 THEN round(eff.removal_effect / se.sum_eff, 6)
          |       ELSE 0.0 END AS attribution
@@ -1233,14 +1238,14 @@ object Oracles {
 
     // confident-learning-lite: nearest-label-centroid confusion matrix
     "label_noise" ->
-      """WITH x AS (SELECT vec_id, label, vec_id % 1024 AS sb, i AS pos, CAST(x AS DOUBLE) AS x
+      s"""WITH x AS (SELECT vec_id, label, vec_id % ${Folds.DefaultBuckets} AS sb, i AS pos, CAST(x AS DOUBLE) AS x
         |  FROM (SELECT vec_id, label, unnest(embedding) AS x,
         |        unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)),
         |s1 AS (SELECT label, pos, sb, count(*) AS sub_n,
-        |       list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+        |       ${Folds.sortedSumSql("x")} AS sub_s
         |       FROM x GROUP BY 1, 2, 3),
         |cm AS (SELECT label, pos,
-        |       round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
+        |       round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
         |       FROM s1 GROUP BY 1, 2),
         |c AS (SELECT label AS cand, list(cm ORDER BY pos) AS c FROM cm GROUP BY 1),
         |v AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -1288,7 +1293,7 @@ object Oracles {
          |f AS (SELECT *, $expCase AS exp_p FROM f0),
          |f2 AS (SELECT *, round((n_obs - n * exp_p) * (n_obs - n * exp_p)
          |       / (n * exp_p), 9) AS chi2_term FROM f),
-         |x AS (SELECT round(list_reduce(list_sort(list(chi2_term)), (a, b) -> a + b), 6) AS chi2 FROM f2)
+         |x AS (SELECT round(${Folds.sortedSumSql("chi2_term")}, 6) AS chi2 FROM f2)
          |SELECT f2.digit, f2.n_obs, round(CAST(f2.n_obs AS DOUBLE) / f2.n, 6) AS obs_p,
          |  f2.exp_p, x.chi2
          |FROM f2 CROSS JOIN x""".stripMargin
@@ -1449,18 +1454,18 @@ object Oracles {
     "reward_normalize" ->
       s"""WITH q AS (SELECT doc_id, lang, source, $qualitySql AS quality FROM documents),
          |m1 AS (SELECT lang, source, CAST(sum(sub_n) AS BIGINT) AS n_grp,
-         |    round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 9) AS mean_q
-         |  FROM (SELECT lang, source, doc_id % 1024 AS sb, count(*) AS sub_n,
-         |        list_reduce(list_sort(list(quality)), (a, b) -> a + b) AS sub_s
+         |    round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS mean_q
+         |  FROM (SELECT lang, source, doc_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+         |        ${Folds.sortedSumSql("quality")} AS sub_s
          |        FROM q GROUP BY 1, 2, 3)
          |  GROUP BY 1, 2),
          |d AS (SELECT q.doc_id, q.lang, q.source, q.quality, m1.mean_q,
          |    round((q.quality - m1.mean_q) * (q.quality - m1.mean_q), 9) AS d2
          |  FROM q JOIN m1 ON m1.lang = q.lang AND m1.source = q.source),
          |m2 AS (SELECT lang, source,
-         |    round(list_reduce(list_sort(list(sub_d)), (a, b) -> a + b) / sum(sub_n), 9) AS var_q
-         |  FROM (SELECT lang, source, doc_id % 1024 AS sb, count(*) AS sub_n,
-         |        list_reduce(list_sort(list(d2)), (a, b) -> a + b) AS sub_d
+         |    round(${Folds.sortedSumSql("sub_d")} / sum(sub_n), 9) AS var_q
+         |  FROM (SELECT lang, source, doc_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+         |        ${Folds.sortedSumSql("d2")} AS sub_d
          |        FROM d GROUP BY 1, 2, 3)
          |  GROUP BY 1, 2)
          |SELECT d.doc_id, d.lang, d.source, d.quality,
@@ -1614,13 +1619,13 @@ object Oracles {
     // Neyman-optimal stratified allocation (B241): quotas by N_h·σ_h
     // with largest-remainder rounding; md5-rank draw fingerprinted
     "neyman_allocation" ->
-      """WITH m AS (SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sx,
+      s"""WITH m AS (SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sx,
         |  sum(CAST(n_chars AS HUGEINT) * n_chars) AS sxx FROM documents GROUP BY 1),
         |s AS (SELECT lang, n_docs,
         |  sqrt(CAST(sxx AS DOUBLE) / n_docs
         |    - (CAST(sx AS DOUBLE) / n_docs) * (CAST(sx AS DOUBLE) / n_docs)) AS sd_raw FROM m),
         |w AS (SELECT lang, n_docs, sd_raw, round(n_docs * sd_raw, 9) AS w FROM s),
-        |t AS (SELECT list_reduce(list_sort(list(w)), (a, b) -> a + b) AS w_tot FROM w),
+        |t AS (SELECT ${Folds.sortedSumSql("w")} AS w_tot FROM w),
         |e AS (SELECT lang, n_docs, sd_raw, w, w_tot,
         |  CAST(floor(100.0 * w / w_tot) AS BIGINT) AS base,
         |  100.0 * w / w_tot - floor(100.0 * w / w_tot) AS rem
@@ -1694,15 +1699,15 @@ object Oracles {
          |      FROM (SELECT toks, unnest(range(1, len(toks))) AS i FROM t)),
          |cb AS (SELECT w1, w2, count(*) AS c12 FROM b GROUP BY 1, 2),
          |cw AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM cb GROUP BY 1),
-         |x AS (SELECT ('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::BIGINT % 1024 AS sb,
+         |x AS (SELECT ('0x' || substr(md5(w1 || ' ' || w2), 1, 4))::BIGINT % ${Folds.DefaultBuckets} AS sb,
          |      c12, round(c12 * ln(CAST(c12 AS DOUBLE) / c1), 6) AS contrib
          |      FROM cb JOIN cw USING (w1)),
          |l1 AS (SELECT sb, CAST(sum(c12) AS BIGINT) AS sub_n, count(*) AS sub_t,
-         |       list_reduce(list_sort(list(contrib)), (a, b) -> a + b) AS sub_s
+         |       ${Folds.sortedSumSql("contrib")} AS sub_s
          |       FROM x GROUP BY 1),
          |g AS (SELECT CAST(sum(sub_n) AS BIGINT) AS n_bigrams,
          |      CAST(sum(sub_t) AS BIGINT) AS n_bigram_types,
-         |      round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6) AS s FROM l1)
+         |      round(${Folds.sortedSumSql("sub_s")}, 6) AS s FROM l1)
          |SELECT n_bigrams, n_bigram_types, round(-s / n_bigrams, 6) AS h_cond FROM g""".stripMargin,
 
     // WIMBD-style top-50 trigrams; global top-k with lexicographic ties
@@ -1728,7 +1733,7 @@ object Oracles {
          |t AS (SELECT k_used, x_k, round(ln(CAST(cnt AS DOUBLE) / x_k), 6) AS term
          |      FROM r CROSS JOIN kth WHERE rk < k_used),
          |g AS (SELECT k_used, x_k, count(*) AS n_terms,
-         |      round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS s
+         |      round(${Folds.sortedSumSql("term")}, 6) AS s
          |      FROM t GROUP BY 1, 2)
          |SELECT k_used, x_k, n_terms,
          |  CASE WHEN s > 0 THEN round(CAST(n_terms AS DOUBLE) / s, 6) ELSE 0.0 END AS hill_alpha
@@ -1742,21 +1747,21 @@ object Oracles {
          |c AS (SELECT token, CAST(sum(tf) AS BIGINT) AS cnt FROM sf GROUP BY 1),
          |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
          |x AS (SELECT source, tf,
-         |      ('0x' || substr(md5(token), 1, 4))::BIGINT % 1024 AS sb,
+         |      ('0x' || substr(md5(token), 1, 4))::BIGINT % ${Folds.DefaultBuckets} AS sb,
          |      round(tf * ln(CAST(cnt AS DOUBLE) / total), 6) AS contrib
          |      FROM sf JOIN c USING (token) CROSS JOIN tot),
          |l1 AS (SELECT source, sb, CAST(sum(tf) AS BIGINT) AS sub_n,
-         |       list_reduce(list_sort(list(contrib)), (a, b) -> a + b) AS sub_s
+         |       ${Folds.sortedSumSql("contrib")} AS sub_s
          |       FROM x GROUP BY 1, 2),
          |d AS (SELECT source, CAST(sum(sub_n) AS BIGINT) AS n_tokens,
-         |      round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6) AS s
+         |      round(${Folds.sortedSumSql("sub_s")}, 6) AS s
          |      FROM l1 GROUP BY 1),
          |d2 AS (SELECT source, n_tokens, round(-s / n_tokens, 9) AS loss FROM d),
          |w AS (SELECT source, n_tokens, loss,
          |      round(CAST(n_tokens AS DOUBLE) / total, 9) AS w0,
          |      round(round(CAST(n_tokens AS DOUBLE) / total, 9) * exp(0.1 * loss), 9) AS w_up
          |      FROM d2 CROSS JOIN tot),
-         |z AS (SELECT list_reduce(list_sort(list(w_up)), (a, b) -> a + b) AS z FROM w)
+         |z AS (SELECT ${Folds.sortedSumSql("w_up")} AS z FROM w)
          |SELECT source, n_tokens, round(loss, 6) AS loss, round(w0, 6) AS w0,
          |  round(w_up / z, 6) AS w_new FROM w CROSS JOIN z""".stripMargin,
 
@@ -2092,10 +2097,10 @@ object Oracles {
          |t AS (SELECT round(ln(CAST(rnk AS DOUBLE)), 9) AS x,
          |             round(ln(CAST(cnt AS DOUBLE)), 9) AS y FROM r),
          |s AS (SELECT count(*) AS n_tokens,
-         |  list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sx,
-         |  list_reduce(list_sort(list(y)), (a, b) -> a + b) AS sy,
-         |  list_reduce(list_sort(list(round(x * y, 9))), (a, b) -> a + b) AS sxy,
-         |  list_reduce(list_sort(list(round(x * x, 9))), (a, b) -> a + b) AS sxx
+         |  ${Folds.sortedSumSql("x")} AS sx,
+         |  ${Folds.sortedSumSql("y")} AS sy,
+         |  ${Folds.sortedSumSql("round(x * y, 9)")} AS sxy,
+         |  ${Folds.sortedSumSql("round(x * x, 9)")} AS sxx
          |  FROM t)
          |SELECT n_tokens,
          |  round((n_tokens * sxy - sx * sy) / (n_tokens * sxx - sx * sx), 6) AS slope,
@@ -2453,7 +2458,7 @@ object Oracles {
          |      FROM b LEFT JOIN cb USING (w1, w2) LEFT JOIN cw USING (w1) CROSS JOIN v
          |      WHERE split = 'test'),
          |g AS (SELECT doc_id, count(*) AS n_bigrams, CAST(sum(oov) AS BIGINT) AS n_oov,
-         |      round(list_reduce(list_sort(list(logp)), (a, b) -> a + b), 6) AS sum_logp
+         |      round(${Folds.sortedSumSql("logp")}, 6) AS sum_logp
          |      FROM x GROUP BY 1)
          |SELECT doc_id, n_bigrams, n_oov, sum_logp, round(-sum_logp / n_bigrams, 6) AS nll
          |FROM g""".stripMargin,
@@ -2508,17 +2513,17 @@ object Oracles {
          |  (n_tokens >= 5 AND n_tokens <= 1000) AND (mean_tok_len >= 2.0 AND mean_tok_len <= 12.0) AND stop_count >= 1 AS kept
          |FROM b""".stripMargin,
 
-    // two-level bit-stable fold (Folds.scala): sorted fold per vec_id%1024
+    // two-level bit-stable fold (Folds.scala): sorted fold per vec_id % DefaultBuckets
     // sub-bucket, then sorted fold of the sub-totals
     "embed_centroids" ->
-      """WITH x AS (SELECT label, vec_id % 1024 AS sb, i AS dim, CAST(x AS DOUBLE) AS x
+      s"""WITH x AS (SELECT label, vec_id % ${Folds.DefaultBuckets} AS sb, i AS dim, CAST(x AS DOUBLE) AS x
         |  FROM (SELECT label, vec_id, unnest(embedding) AS x,
         |        unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)),
         |s AS (SELECT label, dim, sb, count(*) AS sub_n,
-        |      list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sub_s
+        |      ${Folds.sortedSumSql("x")} AS sub_s
         |      FROM x GROUP BY 1, 2, 3)
         |SELECT label, dim, CAST(sum(sub_n) AS BIGINT) AS n_vecs,
-        |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 6) AS centroid
+        |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 6) AS centroid
         |FROM s GROUP BY 1, 2""".stripMargin,
 
     "sequence_pack" ->
@@ -2546,7 +2551,7 @@ object Oracles {
     "doc_similarity" ->
       s"""WITH t AS ($tfidf),
          |w AS (SELECT t.doc_id, d.source AS blk, t.token, t.tfidf FROM t JOIN documents d USING (doc_id)),
-         |n AS (SELECT doc_id, sqrt(list_reduce(list_sort(list(tfidf * tfidf)), (a, b) -> a + b)) AS nrm FROM w GROUP BY doc_id),
+         |n AS (SELECT doc_id, sqrt(${Folds.sortedSumSql("tfidf * tfidf")}) AS nrm FROM w GROUP BY doc_id),
          |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
          |      list_reduce(list(a.tfidf * b.tfidf ORDER BY a.token), (x, y) -> x + y) AS dot
          |      FROM w a JOIN w b ON a.blk = b.blk AND a.token = b.token AND a.doc_id < b.doc_id
@@ -2574,7 +2579,7 @@ object Oracles {
          |rw AS (SELECT w.* FROM w JOIN rare USING (token)),
          |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
          |         FROM rw a JOIN rw b ON a.blk = b.blk AND a.token = b.token AND a.doc_id < b.doc_id),
-         |n AS (SELECT doc_id, sqrt(list_reduce(list_sort(list(tfidf * tfidf)), (a, b) -> a + b)) AS nrm FROM w GROUP BY doc_id),
+         |n AS (SELECT doc_id, sqrt(${Folds.sortedSumSql("tfidf * tfidf")}) AS nrm FROM w GROUP BY doc_id),
          |p AS (SELECT c.a_id, c.b_id, list_reduce(list(wa.tfidf * wb.tfidf ORDER BY wa.token), (x, y) -> x + y) AS dot
          |      FROM cand c JOIN w wa ON wa.doc_id = c.a_id
          |      JOIN w wb ON wb.doc_id = c.b_id AND wb.token = wa.token
@@ -2841,7 +2846,7 @@ object Oracles {
          |       round(CAST(count(DISTINCT tok) AS DOUBLE) / 25, 9) AS ttr_w
          |       FROM cv GROUP BY 1, 2),
          |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-         |       round(list_reduce(list_sort(list(ttr_w)), (a, b) -> a + b), 9) AS sum_ttr
+         |       round(${Folds.sortedSumSql("ttr_w")}, 9) AS sum_ttr
          |       FROM pw GROUP BY 1),
          |v AS (SELECT doc_id, n AS n_tokens,
          |      CAST(len(list_distinct(toks)) AS BIGINT) AS vocab FROM g)
@@ -2856,12 +2861,12 @@ object Oracles {
     "hits_scores" -> {
       val iters = (1 to 3).map { k =>
         s"""ar$k AS (SELECT dst AS token,
-           |  round(list_reduce(list_sort(list(round(w * h, 9))), (x, y) -> x + y), 9) AS ar
+           |  round(${Folds.sortedSumSql("round(w * h, 9)")}, 9) AS ar
            |  FROM e JOIN h${k - 1} ON e.src = h${k - 1}.token GROUP BY dst),
            |am$k AS (SELECT max(ar) AS m FROM ar$k),
            |a$k AS (SELECT token, round(ar / m, 9) AS a FROM ar$k CROSS JOIN am$k),
            |hr$k AS (SELECT src AS token,
-           |  round(list_reduce(list_sort(list(round(w * a, 9))), (x, y) -> x + y), 9) AS hr
+           |  round(${Folds.sortedSumSql("round(w * a, 9)")}, 9) AS hr
            |  FROM e JOIN a$k ON e.dst = a$k.token GROUP BY src),
            |hm$k AS (SELECT max(hr) AS m FROM hr$k),
            |h$k AS (SELECT token, round(hr / m, 9) AS h FROM hr$k CROSS JOIN hm$k)""".stripMargin
@@ -2934,12 +2939,12 @@ object Oracles {
     "sinkhorn_balance" -> {
       val steps = (1 to 5).map { k =>
         s"""rs$k AS (SELECT lang,
-           |  round(list_reduce(list_sort(list(w)), (a, b) -> a + b), 9) AS rs
+           |  round(${Folds.sortedSumSql("w")}, 9) AS rs
            |  FROM w${k - 1} GROUP BY lang),
            |rn$k AS (SELECT lang, source, n_docs, bb, kk, round(w / rs / bb, 9) AS w
            |  FROM w${k - 1} JOIN rs$k USING (lang)),
            |cs$k AS (SELECT source,
-           |  round(list_reduce(list_sort(list(w)), (a, b) -> a + b), 9) AS cs
+           |  round(${Folds.sortedSumSql("w")}, 9) AS cs
            |  FROM rn$k GROUP BY source),
            |w$k AS (SELECT lang, source, n_docs, bb, kk, round(w / cs / kk, 9) AS w
            |  FROM rn$k JOIN cs$k USING (source))""".stripMargin
@@ -2957,7 +2962,7 @@ object Oracles {
     // B305: |ECDF_lang - ECDF_corpus| summed over the bounded bucket
     // grid — exact-integer cumsums divided once, 9 dp terms, sorted fold
     "wasserstein_length" ->
-      """WITH b AS (SELECT lang, least(n_chars // 100, 100) AS bucket FROM documents),
+      s"""WITH b AS (SELECT lang, least(n_chars // 100, 100) AS bucket FROM documents),
         |cnt AS (SELECT lang, bucket, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1, 2),
         |tot AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_l FROM cnt GROUP BY 1),
         |corp AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS c_all FROM cnt GROUP BY 1),
@@ -2975,8 +2980,7 @@ object Oracles {
         |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) / n_l, 9) AS f_l, n_l
         |  FROM e JOIN tot ON e.lang = tot.lang)
         |SELECT f.lang, max(n_l) AS n_docs,
-        |  round(list_reduce(list_sort(list(round(abs(f_l - f_all), 9))),
-        |    (a, b) -> a + b), 6) AS w1_buckets,
+        |  round(${Folds.sortedSumSql("round(abs(f_l - f_all), 9)")}, 6) AS w1_buckets,
         |  CAST(100 AS BIGINT) AS bucket_width
         |FROM f JOIN fc ON f.bucket = fc.bucket GROUP BY f.lang""".stripMargin,
 
@@ -2984,11 +2988,11 @@ object Oracles {
     // cell mean quality; average ranks on ties, tie-corrected statistic
     "friedman_test" ->
       s"""WITH cm AS (SELECT lang, source,
-         |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b)
+         |  round(${Folds.sortedSumSql("sub_s")}
          |    / sum(sub_n), 6) AS mean_q
-         |  FROM (SELECT lang, source, doc_id % 1024 AS sb,
+         |  FROM (SELECT lang, source, doc_id % ${Folds.DefaultBuckets} AS sb,
          |        CAST(count(*) AS BIGINT) AS sub_n,
-         |        round(list_reduce(list_sort(list(q)), (a, b) -> a + b), 9) AS sub_s
+         |        round(${Folds.sortedSumSql("q")}, 9) AS sub_s
          |        FROM (SELECT lang, source, doc_id, $qualitySql AS q FROM documents)
          |        GROUP BY 1, 2, 3)
          |  GROUP BY 1, 2),
@@ -3103,19 +3107,19 @@ object Oracles {
     // the bucket's dim-wise mean centroid (sorted-fold means, index-order
     // dots), ties on vec_id
     "semantic_dedup" ->
-      """WITH b AS (SELECT vec_id, embedding,
+      s"""WITH b AS (SELECT vec_id, embedding,
         |  (CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END) || (CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END) ||
         |  (CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END) || (CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END) ||
         |  (CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END) || (CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END) ||
         |  (CASE WHEN embedding[7] >= 0 THEN '1' ELSE '0' END) || (CASE WHEN embedding[8] >= 0 THEN '1' ELSE '0' END) AS bucket
         |  FROM embeddings),
-        |cd1 AS (SELECT bucket, i, vec_id % 1024 AS sb, count(*) AS sub_n,
-        |       list_reduce(list_sort(list(CAST(x AS DOUBLE))), (p, q) -> p + q) AS sub_s
+        |cd1 AS (SELECT bucket, i, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+        |       ${Folds.sortedSumSql("CAST(x AS DOUBLE)")} AS sub_s
         |       FROM (SELECT bucket, vec_id, unnest(embedding) AS x,
         |             unnest(range(1, len(embedding) + 1)) AS i FROM b)
         |       GROUP BY bucket, i, sb),
         |cd AS (SELECT bucket, i,
-        |       round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 6) AS c
+        |       round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 6) AS c
         |       FROM cd1 GROUP BY bucket, i),
         |cent AS (SELECT bucket, list(c ORDER BY i) AS centroid FROM cd GROUP BY bucket),
         |sc AS (SELECT b.bucket, b.vec_id,
@@ -3144,7 +3148,7 @@ object Oracles {
          |        / ((CAST(c_g AS DOUBLE) + 1) / CAST(tot_g + v AS DOUBLE))), 6) AS contrib
          |      FROM tf JOIN lm USING (token))
          |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |  round(list_reduce(list_sort(list(contrib)), (p, q) -> p + q), 6) AS log_ratio
+         |  round(${Folds.sortedSumSql("contrib")}, 6) AS log_ratio
          |FROM x GROUP BY doc_id""".stripMargin,
 
     // winnowing: md5 3-token shingles in order, window-4 minima, distinct
@@ -3190,7 +3194,7 @@ object Oracles {
          |       FROM cb JOIN cw USING (w1) CROSS JOIN v),
          |x AS (SELECT doc_id, logp FROM b JOIN lm USING (w1, w2)),
          |g AS (SELECT doc_id, count(*) AS n_bigrams,
-         |      round(list_reduce(list_sort(list(logp)), (a, b) -> a + b), 6) AS sum_logp
+         |      round(${Folds.sortedSumSql("logp")}, 6) AS sum_logp
          |      FROM x GROUP BY 1)
          |SELECT doc_id, n_bigrams, sum_logp, round(-sum_logp / n_bigrams, 6) AS nll FROM g""".stripMargin,
 
@@ -3203,7 +3207,7 @@ object Oracles {
       val iters = (1 to 5).map { k =>
         s"""r$k AS (SELECT dst AS token,
            |  round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / n
-           |    + round(list_reduce(list_sort(list(round(CAST(0.85 AS DOUBLE) * r * w / outw, 9))), (a, b) -> a + b), 9), 9) AS r
+           |    + round(${Folds.sortedSumSql("round(CAST(0.85 AS DOUBLE) * r * w / outw, 9)")}, 9), 9) AS r
            |  FROM ew JOIN r${k - 1} ON ew.src = r${k - 1}.token CROSS JOIN nn GROUP BY dst, n)""".stripMargin
       }.mkString(",\n")
       s"""WITH t AS (SELECT $toks AS toks FROM documents WHERE len($toks) >= 2),
@@ -3317,26 +3321,26 @@ object Oracles {
          |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
 
     // dim-wise mean/std from the two-level fold (Folds.scala: sorted fold
-    // per vec_id%1024 sub-bucket, then of the sub-totals); per-vec summary
+    // per vec_id % DefaultBuckets sub-bucket, then of the sub-totals); per-vec summary
     // over the 6 dp-rounded z values keeps the verified output vector-sized
     "embed_standardize" ->
-      """WITH xd AS (SELECT vec_id, CAST(dim AS BIGINT) AS dim, CAST(xf AS DOUBLE) AS x
+      s"""WITH xd AS (SELECT vec_id, CAST(dim AS BIGINT) AS dim, CAST(xf AS DOUBLE) AS x
         |  FROM (SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS dim,
         |        unnest(embedding) AS xf FROM embeddings)),
-        |st0 AS (SELECT dim, vec_id % 1024 AS sb, count(*) AS sub_n,
-        |       list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sub_s,
-        |       list_reduce(list_sort(list(x * x)), (a, b) -> a + b) AS sub_ss
+        |st0 AS (SELECT dim, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+        |       ${Folds.sortedSumSql("x")} AS sub_s,
+        |       ${Folds.sortedSumSql("x * x")} AS sub_ss
         |       FROM xd GROUP BY 1, 2),
         |st AS (SELECT dim, sum(sub_n) AS n,
-        |       list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) AS s,
-        |       list_reduce(list_sort(list(sub_ss)), (a, b) -> a + b) AS ss
+        |       ${Folds.sortedSumSql("sub_s")} AS s,
+        |       ${Folds.sortedSumSql("sub_ss")} AS ss
         |       FROM st0 GROUP BY 1),
         |sd AS (SELECT dim, s / n AS mean, sqrt(ss / n - (s / n) * (s / n)) AS std FROM st),
         |z AS (SELECT vec_id, round((x - mean) / std, 6) AS z
         |      FROM xd JOIN sd USING (dim) WHERE std > 0)
         |SELECT vec_id, count(*) AS n_dims,
-        |  round(list_reduce(list_sort(list(z)), (a, b) -> a + b), 6) AS z_sum,
-        |  round(sqrt(list_reduce(list_sort(list(z * z)), (a, b) -> a + b)), 6) AS z_norm
+        |  round(${Folds.sortedSumSql("z")}, 6) AS z_sum,
+        |  round(sqrt(${Folds.sortedSumSql("z * z")}), 6) AS z_norm
         |FROM z GROUP BY 1""".stripMargin,
 
     // per-doc share of distinct 8-grams with corpus df = 1
@@ -3372,18 +3376,18 @@ object Oracles {
     "pca_power" -> {
       val rounds = (1 to 5).map { k =>
         s"""w$k AS (SELECT dim_i AS dim,
-           |  round(list_reduce(list_sort(list(round(cov * v, 9))), (a, b) -> a + b), 9) AS w
+           |  round(${Folds.sortedSumSql("round(cov * v, 9)")}, 9) AS w
            |  FROM cf JOIN v${k - 1} ON cf.dim_j = v${k - 1}.dim GROUP BY dim_i),
-           |n$k AS (SELECT round(sqrt(list_reduce(list_sort(list(w * w)), (a, b) -> a + b)), 9) AS nrm FROM w$k),
+           |n$k AS (SELECT round(sqrt(${Folds.sortedSumSql("w * w")}), 9) AS nrm FROM w$k),
            |v$k AS (SELECT dim, round(w / nrm, 9) AS v, nrm AS eig FROM w$k CROSS JOIN n$k)""".stripMargin
       }.mkString(",\n")
       s"""WITH p AS (SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
          |      CAST(embedding[i] AS DOUBLE) AS x, CAST(embedding[j] AS DOUBLE) AS y
          |      FROM embeddings, range(1, 9) r1(i), range(1, 9) r2(j) WHERE j >= i),
          |cu AS (SELECT dim_i, dim_j,
-         |  round(list_reduce(list_sort(list(x * y)), (a, b) -> a + b) / count(*)
-         |    - (list_reduce(list_sort(list(x)), (a, b) -> a + b) / count(*))
-         |    * (list_reduce(list_sort(list(y)), (a, b) -> a + b) / count(*)), 6) AS cov
+         |  round(${Folds.sortedSumSql("x * y")} / count(*)
+         |    - (${Folds.sortedSumSql("x")} / count(*))
+         |    * (${Folds.sortedSumSql("y")} / count(*)), 6) AS cov
          |  FROM p GROUP BY dim_i, dim_j),
          |cf AS (SELECT dim_i, dim_j, cov FROM cu
          |       UNION ALL
@@ -3450,7 +3454,7 @@ object Oracles {
     // JL sign projection: s_ij from md5("j:i") first hex digit; 9 dp
     // contributions fold sorted per output dim, one √k division
     "random_projection" ->
-      """WITH x AS (SELECT vec_id, CAST(i AS BIGINT) AS i, CAST(xf AS DOUBLE) AS x
+      s"""WITH x AS (SELECT vec_id, CAST(i AS BIGINT) AS i, CAST(xf AS DOUBLE) AS x
         |  FROM (SELECT vec_id, unnest(range(1, len(embedding) + 1)) AS i,
         |        unnest(embedding) AS xf FROM embeddings)),
         |c AS (SELECT vec_id, CAST(j AS BIGINT) AS j,
@@ -3458,7 +3462,7 @@ object Oracles {
         |   THEN 1.0 ELSE -1.0 END) * x AS c
         |  FROM x CROSS JOIN range(1, 17) r(j))
         |SELECT vec_id, j,
-        |  round(list_reduce(list_sort(list(c)), (a, b) -> a + b) / sqrt(CAST(16.0 AS DOUBLE)), 9) AS y
+        |  round(${Folds.sortedSumSql("c")} / sqrt(CAST(16.0 AS DOUBLE)), 9) AS y
         |FROM c GROUP BY 1, 2""".stripMargin,
 
     // deterministic Lloyd's k-means: init = vec_id < 4, three unrolled
@@ -3475,9 +3479,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -3510,9 +3514,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 17)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -3556,9 +3560,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 17)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -3663,7 +3667,7 @@ object Oracles {
     "bm25_search" ->
       s"""WITH b AS ($bm25Sql)
          |SELECT doc_id, count(*) AS n_matched,
-         |  round(list_reduce(list_sort(list(bm25)), (a, b) -> a + b), 6) AS score
+         |  round(${Folds.sortedSumSql("bm25")}, 6) AS score
          |FROM b WHERE token IN ('query', 'join', 'scan')
          |GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
 
@@ -3672,11 +3676,11 @@ object Oracles {
     "query_expansion" ->
       s"""WITH b AS ($bm25Sql),
          |fbs AS (SELECT doc_id,
-         |    round(list_reduce(list_sort(list(bm25)), (p, r) -> p + r), 6) AS score
+         |    round(${Folds.sortedSumSql("bm25")}, 6) AS score
          |  FROM b WHERE token IN ('query', 'join', 'scan')
          |  GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10),
          |cand AS (SELECT b.token,
-         |    round(list_reduce(list_sort(list(bm25)), (p, r) -> p + r), 6) AS rsv
+         |    round(${Folds.sortedSumSql("bm25")}, 6) AS rsv
          |  FROM b JOIN fbs USING (doc_id)
          |  WHERE b.token NOT IN ('query', 'join', 'scan')
          |  GROUP BY 1)
@@ -3692,7 +3696,7 @@ object Oracles {
          |                              (2, 'data'), (2, 'table')),
          |qn AS (SELECT query_id, count(DISTINCT token) AS q_n FROM q GROUP BY 1),
          |scores AS (SELECT query_id, b.doc_id,
-         |    round(list_reduce(list_sort(list(bm25)), (p, r) -> p + r), 6) AS score
+         |    round(${Folds.sortedSumSql("bm25")}, 6) AS score
          |  FROM b JOIN q USING (token) GROUP BY 1, 2),
          |t AS (SELECT doc_id, unnest($toks) AS token FROM documents),
          |relv AS (SELECT query_id, t.doc_id, count(DISTINCT t.token) AS rel
@@ -3703,9 +3707,7 @@ object Oracles {
          |topk AS (SELECT r.query_id, r.doc_id, r.rnk, relv.rel
          |  FROM ranked r JOIN relv USING (query_id, doc_id) WHERE rnk <= 10),
          |dcg AS (SELECT query_id,
-         |  round(list_reduce(list_sort(list(
-         |    round(CAST(rel AS DOUBLE) / ln(CAST(rnk + 1 AS DOUBLE)), 9))),
-         |    (p, r) -> p + r), 6) AS dcg
+         |  round(${Folds.sortedSumSql("round(CAST(rel AS DOUBLE) / ln(CAST(rnk + 1 AS DOUBLE)), 9)")}, 6) AS dcg
          |  FROM topk GROUP BY 1),
          |mrr AS (SELECT t2.query_id,
          |  coalesce(round(1.0 / min(CASE WHEN t2.rel = qn.q_n THEN t2.rnk END), 6), 0.0) AS mrr
@@ -3714,9 +3716,7 @@ object Oracles {
          |  row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, doc_id) AS irnk
          |  FROM relv),
          |idcg AS (SELECT query_id,
-         |  round(list_reduce(list_sort(list(
-         |    round(CAST(rel AS DOUBLE) / ln(CAST(irnk + 1 AS DOUBLE)), 9))),
-         |    (p, r) -> p + r), 6) AS idcg
+         |  round(${Folds.sortedSumSql("round(CAST(rel AS DOUBLE) / ln(CAST(irnk + 1 AS DOUBLE)), 9)")}, 6) AS idcg
          |  FROM ideal WHERE irnk <= 10 GROUP BY 1)
          |SELECT query_id, mrr.mrr, d.dcg, idcg.idcg,
          |  round(d.dcg / idcg.idcg, 6) AS ndcg
@@ -3832,7 +3832,7 @@ object Oracles {
          |       FROM cb JOIN cw USING (w1) CROSS JOIN v),
          |x AS (SELECT doc_id, logp FROM b JOIN lm USING (w1, w2)),
          |g AS (SELECT doc_id, count(*) AS n_bigrams,
-         |      round(list_reduce(list_sort(list(logp)), (a, b) -> a + b), 6) AS sum_logp
+         |      round(${Folds.sortedSumSql("logp")}, 6) AS sum_logp
          |      FROM x GROUP BY 1),
          |sc AS (SELECT g.doc_id, d.lang, round(-sum_logp / n_bigrams, 6) AS nll
          |       FROM g JOIN documents d USING (doc_id)),
@@ -3927,24 +3927,24 @@ object Oracles {
          |FROM (SELECT DISTINCT q_id FROM bf) q LEFT JOIN hits h USING (q_id)""".stripMargin,
 
     // mean 6dp composite quality per ntile(10) length decile; two-level
-    // fold (Folds.scala): sorted fold per doc_id%1024 sub-bucket, then of
+    // fold (Folds.scala): sorted fold per doc_id % DefaultBuckets sub-bucket, then of
     // the sub-totals
     "quality_by_length_decile" ->
       s"""WITH q AS (SELECT doc_id, n_chars, $qualitySql AS quality FROM documents),
          |d AS (SELECT *, ntile(10) OVER (ORDER BY n_chars, doc_id) AS decile FROM q),
-         |s AS (SELECT decile, doc_id % 1024 AS sb, count(*) AS sub_n,
+         |s AS (SELECT decile, doc_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
          |      CAST(min(n_chars) AS BIGINT) AS sub_min, CAST(max(n_chars) AS BIGINT) AS sub_max,
-         |      list_reduce(list_sort(list(quality)), (a, b) -> a + b) AS sub_s
+         |      ${Folds.sortedSumSql("quality")} AS sub_s
          |      FROM d GROUP BY 1, 2)
          |SELECT CAST(decile AS BIGINT) AS decile, CAST(sum(sub_n) AS BIGINT) AS n_docs,
          |  min(sub_min) AS min_chars, max(sub_max) AS max_chars,
-         |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 6) AS mean_quality
+         |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 6) AS mean_quality
          |FROM s GROUP BY 1""".stripMargin,
 
     // lang x source independence over the FULL margin grid (zero cells
     // contribute their expected count), 6dp terms sorted-folded
     "lang_source_chi2" ->
-      """WITH c AS (SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
+      s"""WITH c AS (SELECT lang, source, count(*) AS o FROM documents GROUP BY 1, 2),
         |rl AS (SELECT lang, CAST(sum(o) AS BIGINT) AS n_l FROM c GROUP BY 1),
         |rs AS (SELECT source, CAST(sum(o) AS BIGINT) AS n_s FROM c GROUP BY 1),
         |nd AS (SELECT count(*) AS n_docs FROM documents),
@@ -3953,7 +3953,7 @@ object Oracles {
         |t AS (SELECT round(pow(CAST(o AS DOUBLE) - CAST(n_l AS DOUBLE) * n_s / n_docs, 2.0)
         |        / (CAST(n_l AS DOUBLE) * n_s / n_docs), 6) AS term
         |      FROM g CROSS JOIN nd)
-        |SELECT round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS chi2,
+        |SELECT round(${Folds.sortedSumSql("term")}, 6) AS chi2,
         |  CAST(((SELECT count(*) FROM rl) - 1) * ((SELECT count(*) FROM rs) - 1) AS BIGINT) AS dof
         |FROM t""".stripMargin,
 
@@ -3963,15 +3963,15 @@ object Oracles {
          |w AS (SELECT t.doc_id, d.lang, t.token, t.tfidf FROM t JOIN documents d USING (doc_id)),
          |nl AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
          |cent AS (SELECT lang AS cand_lang, token,
-         |  round(list_reduce(list_sort(list(tfidf)), (a, b) -> a + b) / n_l, 9) AS c
+         |  round(${Folds.sortedSumSql("tfidf")} / n_l, 9) AS c
          |  FROM w JOIN nl USING (lang) GROUP BY lang, token, n_l),
-         |cn AS (SELECT cand_lang, sqrt(list_reduce(list_sort(list(round(c * c, 9))), (a, b) -> a + b)) AS c_nrm
+         |cn AS (SELECT cand_lang, sqrt(${Folds.sortedSumSql("round(c * c, 9)")}) AS c_nrm
          |       FROM cent GROUP BY 1),
          |dn AS (SELECT doc_id,
-         |  sqrt(list_reduce(list_sort(list(round(tfidf * tfidf, 9))), (a, b) -> a + b)) AS d_nrm
+         |  sqrt(${Folds.sortedSumSql("round(tfidf * tfidf, 9)")}) AS d_nrm
          |  FROM w GROUP BY 1),
          |sc AS (SELECT doc_id, cand_lang,
-         |  list_reduce(list_sort(list(round(tfidf * c, 9))), (a, b) -> a + b) AS dot
+         |  ${Folds.sortedSumSql("round(tfidf * c, 9)")} AS dot
          |  FROM (SELECT doc_id, token, tfidf FROM w) x JOIN cent USING (token)
          |  GROUP BY 1, 2),
          |r AS (SELECT doc_id, cand_lang, round(dot / (d_nrm * c_nrm), 6) AS cos,
@@ -3987,13 +3987,13 @@ object Oracles {
          |w AS (SELECT t.doc_id, d.lang, t.token, t.tfidf FROM t JOIN documents d USING (doc_id)),
          |nl AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY 1),
          |cent AS (SELECT lang, token,
-         |  round(list_reduce(list_sort(list(tfidf)), (a, b) -> a + b) / n_l, 9) AS c
+         |  round(${Folds.sortedSumSql("tfidf")} / n_l, 9) AS c
          |  FROM w JOIN nl USING (lang) GROUP BY lang, token, n_l),
-         |cn AS (SELECT lang, sqrt(list_reduce(list_sort(list(round(c * c, 9))), (a, b) -> a + b)) AS c_nrm
+         |cn AS (SELECT lang, sqrt(${Folds.sortedSumSql("round(c * c, 9)")}) AS c_nrm
          |       FROM cent GROUP BY 1),
          |d AS (SELECT doc_id, lang,
-         |  list_reduce(list_sort(list(round(tfidf * c, 9))), (a, b) -> a + b) AS dot,
-         |  sqrt(list_reduce(list_sort(list(round(tfidf * tfidf, 9))), (a, b) -> a + b)) AS d_nrm
+         |  ${Folds.sortedSumSql("round(tfidf * c, 9)")} AS dot,
+         |  sqrt(${Folds.sortedSumSql("round(tfidf * tfidf, 9)")}) AS d_nrm
          |  FROM w JOIN cent USING (lang, token) GROUP BY 1, 2)
          |SELECT doc_id, lang, round(dot / (d_nrm * c_nrm), 6) AS coherence
          |FROM d JOIN cn USING (lang)""".stripMargin,
@@ -4064,13 +4064,13 @@ object Oracles {
 
     // -p·ln p terms rounded then sorted-folded per source
     "source_lang_entropy" ->
-      """WITH c AS (SELECT source, lang, count(*) AS cnt FROM documents GROUP BY 1, 2),
+      s"""WITH c AS (SELECT source, lang, count(*) AS cnt FROM documents GROUP BY 1, 2),
         |t AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_docs FROM c GROUP BY 1),
         |tm AS (SELECT source, n_docs,
         |  round(-(CAST(cnt AS DOUBLE) / n_docs) * ln(CAST(cnt AS DOUBLE) / n_docs), 6) AS term
         |  FROM c JOIN t USING (source))
         |SELECT source, any_value(n_docs) AS n_docs, count(*) AS n_langs,
-        |  round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS entropy
+        |  round(${Folds.sortedSumSql("term")}, 6) AS entropy
         |FROM tm GROUP BY 1""".stripMargin,
 
     // Gini by the rank formula over ascending spend, exact long sums
@@ -4153,7 +4153,7 @@ object Oracles {
     "logreg_predictions" ->
       s"""$logregWeightCtes,
          |wf AS (SELECT i, round(w, 6) AS w FROM w3),
-         |zf AS (SELECT vec_id, y, list_reduce(list_sort(list(round(w * x, 9))), (a, b) -> a + b) AS z
+         |zf AS (SELECT vec_id, y, ${Folds.sortedSumSql("round(w * x, 9)")} AS z
          |       FROM x JOIN wf USING (i) GROUP BY 1, 2)
          |SELECT vec_id, y, round(1.0 / (1.0 + exp(-z)), 6) AS p,
          |  CASE WHEN round(1.0 / (1.0 + exp(-z)), 6) >= 0.5 THEN 1.0 ELSE 0.0 END AS pred
@@ -4170,7 +4170,7 @@ object Oracles {
          |x AS (SELECT doc_id, tf, round(tf * ln(CAST(cnt AS DOUBLE) / total), 6) AS contrib
          |      FROM tf JOIN c USING (token) CROSS JOIN tot),
          |g AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |      list_reduce(list_sort(list(contrib)), (a, b) -> a + b) AS s FROM x GROUP BY 1)
+         |      ${Folds.sortedSumSql("contrib")} AS s FROM x GROUP BY 1)
          |SELECT doc_id, n_tokens, round(s, 6) AS sum_logprob,
          |  round(s / n_tokens, 6) AS avg_logprob FROM g""".stripMargin,
 
@@ -4181,7 +4181,7 @@ object Oracles {
          |tf2 AS (SELECT doc_id, tf, CAST(sum(tf) OVER (PARTITION BY doc_id) AS BIGINT) AS n FROM tf),
          |x AS (SELECT doc_id, n, round((CAST(tf AS DOUBLE) / n) * ln(CAST(n AS DOUBLE) / tf), 6) AS contrib FROM tf2)
          |SELECT doc_id, min(n) AS n_tokens, count(*) AS n_distinct,
-         |  round(list_reduce(list_sort(list(contrib)), (a, b) -> a + b), 6) AS entropy
+         |  round(${Folds.sortedSumSql("contrib")}, 6) AS entropy
          |FROM x GROUP BY doc_id""".stripMargin,
 
     "lang_kl" ->
@@ -4195,7 +4195,7 @@ object Oracles {
          |        * ln((CAST(cnt_l AS DOUBLE) / tot_l) / (CAST(cnt AS DOUBLE) / total)), 6) AS contrib
          |      FROM cl JOIN tl USING (lang) JOIN c USING (token) CROSS JOIN tot)
          |SELECT lang, min(tot_l) AS n_tokens, count(*) AS n_distinct,
-         |  round(list_reduce(list_sort(list(contrib)), (a, b) -> a + b), 6) AS kl
+         |  round(${Folds.sortedSumSql("contrib")}, 6) AS kl
          |FROM x GROUP BY lang""".stripMargin,
 
     "token_pmi" ->
@@ -4737,8 +4737,8 @@ object Oracles {
          |r AS (SELECT source, round(len / n_toks, 6) AS cpt, round(n_ws / len, 6) AS wsr
          |      FROM p WHERE n_toks > 0)
          |SELECT source, count(*) AS n_docs,
-         |  round(list_reduce(list_sort(list(cpt)), (a, b) -> a + b) / count(*), 6) AS chars_per_token,
-         |  round(list_reduce(list_sort(list(wsr)), (a, b) -> a + b) / count(*), 6) AS ws_ratio
+         |  round(${Folds.sortedSumSql("cpt")} / count(*), 6) AS chars_per_token,
+         |  round(${Folds.sortedSumSql("wsr")} / count(*), 6) AS ws_ratio
          |FROM r GROUP BY source""".stripMargin,
 
     "length_mad" ->
@@ -4783,27 +4783,27 @@ object Oracles {
       s"""WITH ps AS (SELECT source, count(*) AS n_docs,
          |      CAST(sum(len($toks)) AS BIGINT) AS n_tokens FROM documents GROUP BY source),
          |w AS (SELECT *, round(pow(CAST(n_tokens AS DOUBLE), 0.7), 6) AS w_raw FROM ps),
-         |t AS (SELECT list_reduce(list_sort(list(w_raw)), (a, b) -> a + b) AS w_total FROM w)
+         |t AS (SELECT ${Folds.sortedSumSql("w_raw")} AS w_total FROM w)
          |SELECT source, n_docs, n_tokens, round(w_raw / w_total, 6) AS weight,
          |  CAST(floor(w_raw / w_total * 1000000) AS BIGINT) AS alloc_tokens
          |FROM w, t""".stripMargin,
 
     // upper-triangle covariance over dims 1..8; two-level fold
-    // (Folds.scala): sorted fold per vec_id%1024 sub-bucket, then of the
+    // (Folds.scala): sorted fold per vec_id % DefaultBuckets sub-bucket, then of the
     // sub-totals
     "embed_covariance" ->
-      """WITH p AS (SELECT vec_id % 1024 AS sb, CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
+      s"""WITH p AS (SELECT vec_id % ${Folds.DefaultBuckets} AS sb, CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
         |      CAST(embedding[i] AS DOUBLE) AS x, CAST(embedding[j] AS DOUBLE) AS y
         |      FROM embeddings, range(1, 9) r1(i), range(1, 9) r2(j) WHERE j >= i),
         |s AS (SELECT dim_i, dim_j, sb, count(*) AS sub_n,
-        |      list_reduce(list_sort(list(x * y)), (a, b) -> a + b) AS sub_sxy,
-        |      list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sub_sx,
-        |      list_reduce(list_sort(list(y)), (a, b) -> a + b) AS sub_sy
+        |      ${Folds.sortedSumSql("x * y")} AS sub_sxy,
+        |      ${Folds.sortedSumSql("x")} AS sub_sx,
+        |      ${Folds.sortedSumSql("y")} AS sub_sy
         |      FROM p GROUP BY 1, 2, 3)
         |SELECT dim_i, dim_j, CAST(sum(sub_n) AS BIGINT) AS n_vecs,
-        |  round(list_reduce(list_sort(list(sub_sxy)), (a, b) -> a + b) / sum(sub_n)
-        |    - (list_reduce(list_sort(list(sub_sx)), (a, b) -> a + b) / sum(sub_n))
-        |    * (list_reduce(list_sort(list(sub_sy)), (a, b) -> a + b) / sum(sub_n)), 6) AS cov
+        |  round(${Folds.sortedSumSql("sub_sxy")} / sum(sub_n)
+        |    - (${Folds.sortedSumSql("sub_sx")} / sum(sub_n))
+        |    * (${Folds.sortedSumSql("sub_sy")} / sum(sub_n)), 6) AS cov
         |FROM s GROUP BY 1, 2""".stripMargin,
 
     // top-5 cross-label neighbours per query vector (vec_id < 10)
@@ -4823,13 +4823,13 @@ object Oracles {
     // bottom-decile-per-label cosine-to-own-centroid gate; centroid CTE
     // mirrors embed_centroids' two-level fold
     "embed_outliers" ->
-      """WITH cd0 AS (SELECT label, vec_id % 1024 AS sb, i AS dim, count(*) AS sub_n,
-        |      list_reduce(list_sort(list(CAST(x AS DOUBLE))), (a, b) -> a + b) AS sub_s
+      s"""WITH cd0 AS (SELECT label, vec_id % ${Folds.DefaultBuckets} AS sb, i AS dim, count(*) AS sub_n,
+        |      ${Folds.sortedSumSql("CAST(x AS DOUBLE)")} AS sub_s
         |      FROM (SELECT label, vec_id, unnest(embedding) AS x,
         |            unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)
         |      GROUP BY 1, 2, 3),
         |cd AS (SELECT label, dim,
-        |      round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) / sum(sub_n), 6) AS centroid
+        |      round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 6) AS centroid
         |      FROM cd0 GROUP BY 1, 2),
         |cl AS (SELECT label, list(centroid ORDER BY dim) AS c_emb FROM cd GROUP BY label),
         |s AS (SELECT vec_id, e.label AS label,
@@ -5139,17 +5139,17 @@ object Oracles {
 
     // lognormal length fit (B273): ln terms 9dp, two-level sorted folds
     "length_lognormal_fit" ->
-      """WITH terms AS (SELECT lang, n_chars, doc_id % 1024 AS sb,
+      s"""WITH terms AS (SELECT lang, n_chars, doc_id % ${Folds.DefaultBuckets} AS sb,
         |    round(ln(CAST(n_chars AS DOUBLE)), 9) AS l
         |  FROM documents WHERE n_chars > 0),
         |l1 AS (SELECT lang, sb, count(*) AS c, CAST(sum(n_chars) AS BIGINT) AS sc,
-        |    list_reduce(list_sort(list(l)), (a, b) -> a + b) AS sl,
-        |    list_reduce(list_sort(list(l * l)), (a, b) -> a + b) AS sl2
+        |    ${Folds.sortedSumSql("l")} AS sl,
+        |    ${Folds.sortedSumSql("l * l")} AS sl2
         |  FROM terms GROUP BY 1, 2),
         |m AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_docs,
         |    CAST(sum(sc) AS BIGINT) AS sum_chars,
-        |    list_reduce(list_sort(list(sl)), (a, b) -> a + b) AS sl,
-        |    list_reduce(list_sort(list(sl2)), (a, b) -> a + b) AS sl2
+        |    ${Folds.sortedSumSql("sl")} AS sl,
+        |    ${Folds.sortedSumSql("sl2")} AS sl2
         |  FROM l1 GROUP BY 1),
         |d AS (SELECT lang, n_docs, sum_chars, CAST(n_docs AS DOUBLE) AS n,
         |    sl / CAST(n_docs AS DOUBLE) AS mu,
@@ -5259,7 +5259,7 @@ object Oracles {
     "rbo_rankers" ->
       s"""WITH b AS ($bm25Sql),
          |sa AS (SELECT doc_id,
-         |    round(list_reduce(list_sort(list(bm25)), (p, r) -> p + r), 6) AS score
+         |    round(${Folds.sortedSumSql("bm25")}, 6) AS score
          |  FROM b WHERE token IN ('query', 'join', 'scan')
          |  GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10),
          |ra AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS ra FROM sa),
@@ -5278,7 +5278,7 @@ object Oracles {
          |  FROM ds LEFT JOIN xd USING (d))
          |SELECT CAST(10 AS BIGINT) AS k,
          |  CAST(max(CASE WHEN d = 10 THEN x END) AS BIGINT) AS overlap_at_k,
-         |  round((1.0 - 0.9) * list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS rbo_trunc
+         |  round((1.0 - 0.9) * ${Folds.sortedSumSql("term")}, 6) AS rbo_trunc
          |FROM ad""".stripMargin,
 
     // bag set ops (C248): identical syntax both engines
@@ -5302,18 +5302,18 @@ object Oracles {
            |  1.0 / (1.0 + exp(-(ab${i - 1}.a * score + ab${i - 1}.b))) AS p
            |  FROM scb, ab${i - 1}),
            |l1_$i AS (SELECT sb,
-           |  list_reduce(list_sort(list(score * (n * p - n_pos))), (x, y) -> x + y) AS ga,
-           |  list_reduce(list_sort(list(n * p - n_pos)), (x, y) -> x + y) AS gb,
-           |  list_reduce(list_sort(list(n * p * (1.0 - p) * score * score)), (x, y) -> x + y) AS haa,
-           |  list_reduce(list_sort(list(n * p * (1.0 - p) * score)), (x, y) -> x + y) AS hab,
-           |  list_reduce(list_sort(list(n * p * (1.0 - p))), (x, y) -> x + y) AS hbb
+           |  ${Folds.sortedSumSql("score * (n * p - n_pos)")} AS ga,
+           |  ${Folds.sortedSumSql("n * p - n_pos")} AS gb,
+           |  ${Folds.sortedSumSql("n * p * (1.0 - p) * score * score")} AS haa,
+           |  ${Folds.sortedSumSql("n * p * (1.0 - p) * score")} AS hab,
+           |  ${Folds.sortedSumSql("n * p * (1.0 - p)")} AS hbb
            |  FROM tp$i GROUP BY sb),
            |l2_$i AS (SELECT
-           |  list_reduce(list_sort(list(ga)), (x, y) -> x + y) AS ga,
-           |  list_reduce(list_sort(list(gb)), (x, y) -> x + y) AS gb,
-           |  list_reduce(list_sort(list(haa)), (x, y) -> x + y) AS haa,
-           |  list_reduce(list_sort(list(hab)), (x, y) -> x + y) AS hab,
-           |  list_reduce(list_sort(list(hbb)), (x, y) -> x + y) AS hbb
+           |  ${Folds.sortedSumSql("ga")} AS ga,
+           |  ${Folds.sortedSumSql("gb")} AS gb,
+           |  ${Folds.sortedSumSql("haa")} AS haa,
+           |  ${Folds.sortedSumSql("hab")} AS hab,
+           |  ${Folds.sortedSumSql("hbb")} AS hbb
            |  FROM l1_$i),
            |ab$i AS (SELECT
            |  round(ab${i - 1}.a - (l.hbb * l.ga - l.hab * l.gb)
@@ -5327,16 +5327,16 @@ object Oracles {
          |  CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS n_neg
          |  FROM documents GROUP BY 1),
          |scb AS (SELECT score, n_pos, n_neg, n_pos + n_neg AS n,
-         |  CAST(round(score * 1000000) AS BIGINT) % 1024 AS sb FROM sc),
+         |  CAST(round(score * 1000000) AS BIGINT) % ${Folds.DefaultBuckets} AS sb FROM sc),
          |ab0 AS (SELECT 0.0 AS a, 0.0 AS b),
          |${steps.mkString(",\n")},
          |nt AS (SELECT sb,
          |  -(n_pos * ln(1.0 / (1.0 + exp(-(ab8.a * score + ab8.b))))
          |    + n_neg * ln(1.0 - 1.0 / (1.0 + exp(-(ab8.a * score + ab8.b))))) AS t
          |  FROM scb, ab8),
-         |n1 AS (SELECT sb, list_reduce(list_sort(list(t)), (x, y) -> x + y) AS s
+         |n1 AS (SELECT sb, ${Folds.sortedSumSql("t")} AS s
          |  FROM nt GROUP BY sb),
-         |n2 AS (SELECT list_reduce(list_sort(list(s)), (x, y) -> x + y) AS nll FROM n1)
+         |n2 AS (SELECT ${Folds.sortedSumSql("s")} AS nll FROM n1)
          |SELECT CAST(8 AS BIGINT) AS n_steps, round(ab8.a, 6) AS a,
          |  round(ab8.b, 6) AS b, round(n2.nll, 6) AS nll
          |FROM ab8, n2""".stripMargin
@@ -5362,23 +5362,23 @@ object Oracles {
     // embedding isotropy (B266): mean pairwise unit cosine off the
     // sum-vector identity; 9dp units, two-level sorted folds throughout
     "embed_isotropy" ->
-      """WITH u AS (SELECT vec_id,
+      s"""WITH u AS (SELECT vec_id,
         |    list_transform(embedding, x -> round(CAST(x AS DOUBLE)
         |      / sqrt(list_reduce(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)), (a, b) -> a + b)), 9)) AS u
         |  FROM embeddings
         |  WHERE list_reduce(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)), (a, b) -> a + b) > 0),
-        |pd AS (SELECT CAST(d AS BIGINT) AS dim, vec_id % 1024 AS sb, u[d] AS x
+        |pd AS (SELECT CAST(d AS BIGINT) AS dim, vec_id % ${Folds.DefaultBuckets} AS sb, u[d] AS x
         |  FROM u, range(1, 65) r(d)),
-        |l1 AS (SELECT dim, sb, list_reduce(list_sort(list(x)), (a, b) -> a + b) AS ss
+        |l1 AS (SELECT dim, sb, ${Folds.sortedSumSql("x")} AS ss
         |  FROM pd GROUP BY 1, 2),
-        |l2 AS (SELECT dim, list_reduce(list_sort(list(ss)), (a, b) -> a + b) AS s
+        |l2 AS (SELECT dim, ${Folds.sortedSumSql("ss")} AS s
         |  FROM l1 GROUP BY 1),
-        |s2 AS (SELECT list_reduce(list_sort(list(s * s)), (a, b) -> a + b) AS norm_s2 FROM l2),
-        |dg1 AS (SELECT vec_id % 1024 AS sb,
+        |s2 AS (SELECT ${Folds.sortedSumSql("s * s")} AS norm_s2 FROM l2),
+        |dg1 AS (SELECT vec_id % ${Folds.DefaultBuckets} AS sb,
         |    list_reduce(list_transform(u, x -> x * x), (a, b) -> a + b) AS uu FROM u),
-        |dg2 AS (SELECT sb, list_reduce(list_sort(list(uu)), (a, b) -> a + b) AS ss
+        |dg2 AS (SELECT sb, ${Folds.sortedSumSql("uu")} AS ss
         |  FROM dg1 GROUP BY 1),
-        |dg AS (SELECT list_reduce(list_sort(list(ss)), (a, b) -> a + b) AS q FROM dg2),
+        |dg AS (SELECT ${Folds.sortedSumSql("ss")} AS q FROM dg2),
         |n AS (SELECT count(*) AS n_vecs FROM u)
         |SELECT CAST(n_vecs AS BIGINT) AS n_vecs, round(norm_s2, 6) AS norm_s2,
         |  CASE WHEN n_vecs > 1 THEN
@@ -5509,8 +5509,8 @@ object Oracles {
          |  FROM tot t CROSS JOIN top p
          |  LEFT JOIN cnt c ON c.source = t.source AND c.token = p.token),
          |st AS (SELECT token, count(*) AS ns,
-         |    list_reduce(list_sort(list(f)), (a, b) -> a + b) AS sf,
-         |    list_reduce(list_sort(list(f * f)), (a, b) -> a + b) AS sf2
+         |    ${Folds.sortedSumSql("f")} AS sf,
+         |    ${Folds.sortedSumSql("f * f")} AS sf2
          |  FROM grid GROUP BY 1),
          |sv AS (SELECT token, sf / ns AS mu,
          |    sf2 / ns - (sf / ns) * (sf / ns) AS variance FROM st
@@ -5694,12 +5694,12 @@ object Oracles {
     // split-half embedding stability: per-label parity-half centroids,
     // 9dp sorted-fold means, dim-ordered cosine terms
     "embed_label_drift" ->
-      """WITH base AS (SELECT CAST(label AS BIGINT) AS label, vec_id % 2 AS half,
+      s"""WITH base AS (SELECT CAST(label AS BIGINT) AS label, vec_id % 2 AS half,
         |  vec_id, pos, CAST(embedding[pos] AS DOUBLE) AS x
         |  FROM (SELECT label, vec_id, embedding, unnest(range(1, 9)) AS pos
         |        FROM embeddings)),
         |cent AS (SELECT label, half, pos, count(*) AS n,
-        |  round(list_reduce(list_sort(list(x)), (a, b) -> a + b) / count(*), 9) AS c
+        |  round(${Folds.sortedSumSql("x")} / count(*), 9) AS c
         |  FROM base GROUP BY 1, 2, 3),
         |j AS (SELECT c0.label, c0.pos, c0.n AS rows0, c1.n AS rows1,
         |  round(c0.c * c1.c, 9) AS td, round(c0.c * c0.c, 9) AS t0,
@@ -6251,7 +6251,7 @@ object Oracles {
 
     // Shannon entropy / perplexity of the session-path distribution
     "path_entropy" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
+      s"""WITH e AS (SELECT user_id, event_id, event_type,
         |  epoch_ns(ts) // 1000 AS us FROM events),
         |l AS (SELECT *, lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) AS prev_us FROM e),
         |n AS (SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_session FROM l),
@@ -6267,7 +6267,7 @@ object Oracles {
         |          * ln(CAST(n_sessions AS DOUBLE) / n_total), 6) AS term
         |       FROM pc CROSS JOIN tt),
         |h AS (SELECT n_total AS n_sessions, count(*) AS n_paths,
-        |        round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS entropy
+        |        round(${Folds.sortedSumSql("term")}, 6) AS entropy
         |       FROM tm GROUP BY 1)
         |SELECT n_sessions, n_paths, entropy, round(exp(entropy), 6) AS perplexity
         |FROM h""".stripMargin,
@@ -6322,7 +6322,7 @@ object Oracles {
          |       FROM pr LEFT JOIN cp ON cp.w_i = pr.w_i AND cp.w_j = pr.w_j
          |       JOIN dfr ON dfr.token = pr.w_j)
          |SELECT bucket, count(*) AS n_pairs,
-         |  round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS coherence
+         |  round(${Folds.sortedSumSql("term")}, 6) AS coherence
          |FROM tm GROUP BY 1""".stripMargin,
 
     // vocab-set overlap between the clean whitespace tokenizer and the
@@ -6400,7 +6400,7 @@ object Oracles {
 
     // exp(-gap/6h) weighted multi-touch split over the 24h lookback
     "attribution_time_decay" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value, epoch_ns(ts) // 1000 AS us FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, event_type, value, epoch_ns(ts) // 1000 AS us FROM events),
         |p AS (SELECT event_id, user_id, us, CAST(round(value * 100) AS BIGINT) AS cents
         |      FROM e WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, us AS click_us FROM e WHERE event_type = 'click' GROUP BY 1, 2),
@@ -6408,17 +6408,17 @@ object Oracles {
         |      round(exp(-((p.us - c.click_us) / 1000000.0) / 21600.0), 9) AS w
         |      FROM p JOIN c ON c.user_id = p.user_id
         |       AND c.click_us > p.us - 86400000000 AND c.click_us <= p.us),
-        |d AS (SELECT event_id, round(list_reduce(list_sort(list(w)), (a, b) -> a + b), 9) AS denom
+        |d AS (SELECT event_id, round(${Folds.sortedSumSql("w")}, 9) AS denom
         |      FROM t GROUP BY 1)
         |SELECT (t.click_us // 3600000000) % 24 AS click_hour,
         |  count(*) AS n_touches,
-        |  round(list_reduce(list_sort(list(round(t.cents * t.w / d.denom, 4))), (a, b) -> a + b), 4) AS attributed_value
+        |  round(${Folds.sortedSumSql("round(t.cents * t.w / d.denom, 4)")}, 4) AS attributed_value
         |FROM t JOIN d USING (event_id) GROUP BY 1""".stripMargin,
 
     // U-shaped position attribution: 40/20/40 with rank/count windows
     // over the same lookback pairing as time-decay
     "attribution_position" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value, epoch_ns(ts) // 1000 AS us FROM events),
+      s"""WITH e AS (SELECT event_id, user_id, event_type, value, epoch_ns(ts) // 1000 AS us FROM events),
         |p AS (SELECT event_id, user_id, us, CAST(round(value * 100) AS BIGINT) AS cents
         |      FROM e WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, us AS click_us FROM e WHERE event_type = 'click' GROUP BY 1, 2),
@@ -6432,7 +6432,7 @@ object Oracles {
         |           WHEN rn = 1 OR rn = n THEN 0.4
         |           ELSE round(0.2 / (n - 2), 9) END AS w FROM t)
         |SELECT (click_us // 3600000000) % 24 AS click_hour, count(*) AS n_touches,
-        |  round(list_reduce(list_sort(list(round(cents * w, 4))), (a, b) -> a + b), 4) AS attributed_value
+        |  round(${Folds.sortedSumSql("round(cents * w, 4)")}, 4) AS attributed_value
         |FROM w GROUP BY 1""".stripMargin,
 
     // piecewise-linear interpolation of the daily revenue series at
@@ -6451,18 +6451,18 @@ object Oracles {
 
     // calendar-lag autocorrelation of daily revenue, lags 1..7
     "revenue_acf" ->
-      """WITH days AS (SELECT epoch_ns(ts) // 1000 // 86400000000 AS day_idx,
+      s"""WITH days AS (SELECT epoch_ns(ts) // 1000 // 86400000000 AS day_idx,
         |      CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS r FROM events GROUP BY 1),
         |st AS (SELECT count(*) AS n_days, round(CAST(sum(r) AS DOUBLE) / count(*), 9) AS mean_r FROM days),
         |dev AS (SELECT day_idx, r - mean_r AS dev FROM days CROSS JOIN st),
-        |den AS (SELECT round(list_reduce(list_sort(list(round(dev * dev, 6))), (a, b) -> a + b), 6) AS den FROM dev),
+        |den AS (SELECT round(${Folds.sortedSumSql("round(dev * dev, 6)")}, 6) AS den FROM dev),
         |pr AS (SELECT l.k, d1.dev AS dev, d2.dev AS dev_lag
         |       FROM (VALUES (1),(2),(3),(4),(5),(6),(7)) AS l(k)
         |       JOIN dev d2 ON true
         |       JOIN dev d1 ON d1.day_idx = d2.day_idx + l.k)
         |SELECT k AS lag_days, CAST(count(*) AS BIGINT) AS n_pairs,
         |  CASE WHEN den > 0 THEN
-        |    round(round(list_reduce(list_sort(list(round(dev * dev_lag, 6))), (a, b) -> a + b), 6) / den, 6)
+        |    round(round(${Folds.sortedSumSql("round(dev * dev_lag, 6)")}, 6) / den, 6)
         |  ELSE 0.0 END AS acf
         |FROM pr CROSS JOIN den GROUP BY k, den""".stripMargin,
 
@@ -6713,18 +6713,18 @@ object Oracles {
     "pca_explained" -> {
       def rounds(tag: String, mat: String) = (1 to 5).map { k =>
         s"""w$tag$k AS MATERIALIZED (SELECT dim_i AS dim,
-           |  round(list_reduce(list_sort(list(round(cov * v, 9))), (a, b) -> a + b), 9) AS w
+           |  round(${Folds.sortedSumSql("round(cov * v, 9)")}, 9) AS w
            |  FROM $mat JOIN v$tag${k - 1} ON $mat.dim_j = v$tag${k - 1}.dim GROUP BY dim_i),
-           |n$tag$k AS MATERIALIZED (SELECT round(sqrt(list_reduce(list_sort(list(w * w)), (a, b) -> a + b)), 9) AS nrm FROM w$tag$k),
+           |n$tag$k AS MATERIALIZED (SELECT round(sqrt(${Folds.sortedSumSql("w * w")}), 9) AS nrm FROM w$tag$k),
            |v$tag$k AS MATERIALIZED (SELECT dim, round(w / nrm, 9) AS v, nrm AS eig FROM w$tag$k CROSS JOIN n$tag$k)""".stripMargin
       }.mkString(",\n")
       s"""WITH p AS MATERIALIZED (SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
          |      CAST(embedding[i] AS DOUBLE) AS x, CAST(embedding[j] AS DOUBLE) AS y
          |      FROM embeddings, range(1, 9) r1(i), range(1, 9) r2(j) WHERE j >= i),
          |cu AS MATERIALIZED (SELECT dim_i, dim_j,
-         |  round(list_reduce(list_sort(list(x * y)), (a, b) -> a + b) / count(*)
-         |    - (list_reduce(list_sort(list(x)), (a, b) -> a + b) / count(*))
-         |    * (list_reduce(list_sort(list(y)), (a, b) -> a + b) / count(*)), 6) AS cov
+         |  round(${Folds.sortedSumSql("x * y")} / count(*)
+         |    - (${Folds.sortedSumSql("x")} / count(*))
+         |    * (${Folds.sortedSumSql("y")} / count(*)), 6) AS cov
          |  FROM p GROUP BY dim_i, dim_j),
          |cf AS MATERIALIZED (SELECT dim_i, dim_j, cov FROM cu
          |       UNION ALL
@@ -6737,7 +6737,7 @@ object Oracles {
          |vB0 AS MATERIALIZED (SELECT CAST(i AS BIGINT) AS dim,
          |        CAST(1.0 AS DOUBLE) / sqrt(CAST(8.0 AS DOUBLE)) AS v FROM range(1, 9) r(i)),
          |${rounds("B", "c2")},
-         |tr AS (SELECT round(list_reduce(list_sort(list(cov)), (a, b) -> a + b), 9) AS trace
+         |tr AS (SELECT round(${Folds.sortedSumSql("cov")}, 9) AS trace
          |       FROM cf WHERE dim_i = dim_j),
          |e1 AS (SELECT 1 AS component, max(eig) AS eigenvalue FROM vA5),
          |e2 AS (SELECT 2 AS component, max(eig) AS eigenvalue FROM vB5)
@@ -6774,13 +6774,13 @@ object Oracles {
     // eta-squared + F of daily revenue by day-of-week bucket
     // (moment formulation; SS values never emitted, only O(1) ratios)
     "seasonality_anova" ->
-      """WITH days AS (SELECT epoch_ns(ts) // 1000 // 86400000000 AS day_idx,
+      s"""WITH days AS (SELECT epoch_ns(ts) // 1000 // 86400000000 AS day_idx,
         |      CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS r FROM events GROUP BY 1),
         |gm AS (SELECT day_idx % 7 AS dow, CAST(count(*) AS BIGINT) AS n_g,
         |       CAST(sum(r) AS BIGINT) AS sg, sum(r * r) AS sg2 FROM days GROUP BY 1),
         |tot AS (SELECT CAST(count(*) AS BIGINT) AS k_dow, CAST(sum(n_g) AS BIGINT) AS n_days,
         |  CAST(sum(sg) AS BIGINT) AS s, sum(sg2) AS s2,
-        |  list_reduce(list_sort(list(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / n_g)), (a, b) -> a + b) AS bsum
+        |  ${Folds.sortedSumSql("CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE) / n_g")} AS bsum
         |  FROM gm),
         |ss AS (SELECT n_days, k_dow,
         |  CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n_days AS sst,
@@ -6858,10 +6858,10 @@ object Oracles {
          |x AS (SELECT round(ln(CAST(cnt AS DOUBLE)), 9) AS x,
          |      CAST(length(token) AS DOUBLE) AS y FROM c),
          |a AS (SELECT count(*) AS n_tokens,
-         |  list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sx,
-         |  list_reduce(list_sort(list(y)), (p, q) -> p + q) AS sy,
-         |  list_reduce(list_sort(list(round(x * y, 9))), (p, q) -> p + q) AS sxy,
-         |  list_reduce(list_sort(list(round(x * x, 9))), (p, q) -> p + q) AS sxx
+         |  ${Folds.sortedSumSql("x")} AS sx,
+         |  ${Folds.sortedSumSql("y")} AS sy,
+         |  ${Folds.sortedSumSql("round(x * y, 9)")} AS sxy,
+         |  ${Folds.sortedSumSql("round(x * x, 9)")} AS sxx
          |  FROM x)
          |SELECT n_tokens,
          |  round((n_tokens * sxy - sx * sy) / (n_tokens * sxx - sx * sx), 6) AS slope_len_per_lnf,
@@ -6950,13 +6950,13 @@ object Oracles {
 
     // Pearson correlation matrix over the first 8 dims + redundancy flag
     "embed_dim_corr" ->
-      """WITH p AS (SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
+      s"""WITH p AS (SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
         |      CAST(embedding[i] AS DOUBLE) AS x, CAST(embedding[j] AS DOUBLE) AS y
         |      FROM embeddings, range(1, 9) r1(i), range(1, 9) r2(j) WHERE j >= i),
         |cu AS (SELECT dim_i, dim_j,
-        |  round(list_reduce(list_sort(list(x * y)), (a, b) -> a + b) / count(*)
-        |    - (list_reduce(list_sort(list(x)), (a, b) -> a + b) / count(*))
-        |    * (list_reduce(list_sort(list(y)), (a, b) -> a + b) / count(*)), 6) AS cov
+        |  round(${Folds.sortedSumSql("x * y")} / count(*)
+        |    - (${Folds.sortedSumSql("x")} / count(*))
+        |    * (${Folds.sortedSumSql("y")} / count(*)), 6) AS cov
         |  FROM p GROUP BY dim_i, dim_j),
         |sd AS (SELECT dim_i AS dim, sqrt(cov) AS sd FROM cu WHERE dim_i = dim_j)
         |SELECT dim_i, dim_j, corr, abs(corr) >= 0.95 AS redundant FROM (
@@ -7098,7 +7098,7 @@ object Oracles {
          |   CASE WHEN q > 0 THEN q * ln(q / ((p + q) / 2)) ELSE 0.0 END, 9) AS contrib
          |   FROM j)
          |SELECT lang_a, lang_b, CAST(count(*) AS BIGINT) AS n_tokens_union,
-         |  round(0.5 * list_reduce(list_sort(list(contrib)), (a, b) -> a + b), 6) AS js
+         |  round(0.5 * ${Folds.sortedSumSql("contrib")}, 6) AS js
          |FROM x GROUP BY 1, 2""".stripMargin,
 
     // centroid silhouette over the same 3-round Lloyd fit as kmeans_lloyd
@@ -7115,9 +7115,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS MATERIALIZED (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -7319,7 +7319,7 @@ object Oracles {
          |tg AS (SELECT doc_id, lang, gram, count(*) AS cnt
          |       FROM g WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
          |sc AS (SELECT t.doc_id, t.lang, p.plang,
-         |       list_reduce(list_sort(list(round(t.cnt * p.lnp, 9))), (a, b) -> a + b) AS score
+         |       ${Folds.sortedSumSql("round(t.cnt * p.lnp, 9)")} AS score
          |       FROM tg t JOIN p50 p ON p.gram = t.gram GROUP BY 1, 2, 3),
          |best AS (SELECT doc_id, plang,
          |         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, plang) AS rn
@@ -7348,7 +7348,7 @@ object Oracles {
          |ws AS (SELECT token, round(CAST(sum(plen) AS DOUBLE) / count(*), 9) AS wscore
          |       FROM m JOIN ph ON ph.doc_id = m.doc_id AND ph.grp = m.grp GROUP BY 1),
          |ps AS (SELECT m.doc_id, m.grp, ph.phrase, ph.plen,
-         |       round(list_reduce(list_sort(list(wscore)), (a, b) -> a + b), 6) AS score
+         |       round(${Folds.sortedSumSql("wscore")}, 6) AS score
          |       FROM m JOIN ph ON ph.doc_id = m.doc_id AND ph.grp = m.grp
          |       JOIN ws ON ws.token = m.token GROUP BY 1, 2, 3, 4)
          |SELECT phrase, plen AS n_words, CAST(count(*) AS BIGINT) AS n_occurrences, score
@@ -7411,8 +7411,8 @@ object Oracles {
          |                   - CAST(pp AS DOUBLE) / nn, 2), 9) AS res_term
          |     FROM gb CROSS JOIN t)
          |SELECT nn AS n, round(CAST(pp AS DOUBLE) / nn, 6) AS base_rate,
-         |  round(list_reduce(list_sort(list(rel_term)), (a, b) -> a + b) / nn, 6) AS reliability,
-         |  round(list_reduce(list_sort(list(res_term)), (a, b) -> a + b) / nn, 6) AS resolution,
+         |  round(${Folds.sortedSumSql("rel_term")} / nn, 6) AS reliability,
+         |  round(${Folds.sortedSumSql("res_term")} / nn, 6) AS resolution,
          |  round(CAST(pp AS DOUBLE) / nn * (1.0 - CAST(pp AS DOUBLE) / nn), 6) AS uncertainty,
          |  round(CAST(ss AS DOUBLE) / nn / 1000000000000.0, 6) AS brier
          |FROM terms GROUP BY nn, pp, ss""".stripMargin,
@@ -7481,18 +7481,18 @@ object Oracles {
     "embed_pca_project" -> {
       def rounds(tag: String, mat: String) = (1 to 5).map { k =>
         s"""w$tag$k AS MATERIALIZED (SELECT dim_i AS dim,
-           |  round(list_reduce(list_sort(list(round(cov * v, 9))), (a, b) -> a + b), 9) AS w
+           |  round(${Folds.sortedSumSql("round(cov * v, 9)")}, 9) AS w
            |  FROM $mat JOIN v$tag${k - 1} ON $mat.dim_j = v$tag${k - 1}.dim GROUP BY dim_i),
-           |n$tag$k AS MATERIALIZED (SELECT round(sqrt(list_reduce(list_sort(list(w * w)), (a, b) -> a + b)), 9) AS nrm FROM w$tag$k),
+           |n$tag$k AS MATERIALIZED (SELECT round(sqrt(${Folds.sortedSumSql("w * w")}), 9) AS nrm FROM w$tag$k),
            |v$tag$k AS MATERIALIZED (SELECT dim, round(w / nrm, 9) AS v, nrm AS eig FROM w$tag$k CROSS JOIN n$tag$k)""".stripMargin
       }.mkString(",\n")
       s"""WITH p AS MATERIALIZED (SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
          |      CAST(embedding[i] AS DOUBLE) AS x, CAST(embedding[j] AS DOUBLE) AS y
          |      FROM embeddings, range(1, 9) r1(i), range(1, 9) r2(j) WHERE j >= i),
          |cu AS MATERIALIZED (SELECT dim_i, dim_j,
-         |  round(list_reduce(list_sort(list(x * y)), (a, b) -> a + b) / count(*)
-         |    - (list_reduce(list_sort(list(x)), (a, b) -> a + b) / count(*))
-         |    * (list_reduce(list_sort(list(y)), (a, b) -> a + b) / count(*)), 6) AS cov
+         |  round(${Folds.sortedSumSql("x * y")} / count(*)
+         |    - (${Folds.sortedSumSql("x")} / count(*))
+         |    * (${Folds.sortedSumSql("y")} / count(*)), 6) AS cov
          |  FROM p GROUP BY dim_i, dim_j),
          |cf AS MATERIALIZED (SELECT dim_i, dim_j, cov FROM cu
          |       UNION ALL
@@ -7508,10 +7508,10 @@ object Oracles {
          |xv AS MATERIALIZED (SELECT vec_id, CAST(i AS BIGINT) AS dim,
          |     CAST(embedding[i] AS DOUBLE) AS x FROM embeddings, range(1, 9) r(i)),
          |pj1 AS (SELECT vec_id,
-         |     round(list_reduce(list_sort(list(round(x * v, 9))), (a, b) -> a + b), 6) AS p1
+         |     round(${Folds.sortedSumSql("round(x * v, 9)")}, 6) AS p1
          |     FROM xv JOIN vA5 ON vA5.dim = xv.dim GROUP BY 1),
          |pj2 AS (SELECT vec_id,
-         |     round(list_reduce(list_sort(list(round(x * v, 9))), (a, b) -> a + b), 6) AS p2
+         |     round(${Folds.sortedSumSql("round(x * v, 9)")}, 6) AS p2
          |     FROM xv JOIN vB5 ON vB5.dim = xv.dim GROUP BY 1)
          |SELECT pj1.vec_id, pj1.p1, pj2.p2
          |FROM pj1 JOIN pj2 ON pj2.vec_id = pj1.vec_id""".stripMargin
@@ -7834,7 +7834,7 @@ object Oracles {
          |      FROM cnt)
          |SELECT doc_id, len AS n_chars_clean,
          |  CAST(count(*) AS BIGINT) AS n_distinct_chars,
-         |  round(list_reduce(list_sort(list(term)), (a, b) -> a + b), 6) AS entropy_nats
+         |  round(${Folds.sortedSumSql("term")}, 6) AS entropy_nats
          |FROM t GROUP BY doc_id, len""".stripMargin,
 
     // truncation loss over the {128, 512, 2048} context grid
@@ -8128,14 +8128,14 @@ object Oracles {
          |  FROM held CROSS JOIN ht CROSS JOIN tm CROSS JOIN vv
          |  LEFT JOIN cm ON cm.m = tm.m AND cm.token = held.token),
          |xent AS (SELECT m, n_train,
-         |  round(list_reduce(list_sort(list(contrib)), (a, b) -> a + b), 6) AS heldout_xent
+         |  round(${Folds.sortedSumSql("contrib")}, 6) AS heldout_xent
          |  FROM terms GROUP BY 1, 2),
          |pts AS (SELECT m, n_train, heldout_xent, ln(CAST(n_train AS DOUBLE)) AS x FROM xent),
          |mom AS (SELECT CAST(count(*) AS DOUBLE) AS kk,
-         |  list_reduce(list_sort(list(x)), (a, b) -> a + b) AS sx,
-         |  list_reduce(list_sort(list(heldout_xent)), (a, b) -> a + b) AS sy,
-         |  list_reduce(list_sort(list(round(x * heldout_xent, 9))), (a, b) -> a + b) AS sxy,
-         |  list_reduce(list_sort(list(round(x * x, 9))), (a, b) -> a + b) AS sxx
+         |  ${Folds.sortedSumSql("x")} AS sx,
+         |  ${Folds.sortedSumSql("heldout_xent")} AS sy,
+         |  ${Folds.sortedSumSql("round(x * heldout_xent, 9)")} AS sxy,
+         |  ${Folds.sortedSumSql("round(x * x, 9)")} AS sxx
          |  FROM pts),
          |fit AS (SELECT
          |  round((kk * sxy - sx * sy) / (kk * sxx - sx * sx), 6) AS loglog_slope,
@@ -8779,9 +8779,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS MATERIALIZED (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -8840,9 +8840,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS MATERIALIZED (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -8990,9 +8990,9 @@ object Oracles {
            |    FROM v CROSS JOIN $c)) WHERE rn = 1)""".stripMargin
       def recenter(a: String, m: String, c: String) =
         s"""$m AS MATERIALIZED (SELECT cluster, pos,
-           |  round(list_reduce(list_sort(list(sub_s)), (p, q) -> p + q) / sum(sub_n), 9) AS cm
-           |  FROM (SELECT cluster, pos, vec_id % 1024 AS sb, count(*) AS sub_n,
-           |        list_reduce(list_sort(list(x)), (p, q) -> p + q) AS sub_s
+           |  round(${Folds.sortedSumSql("sub_s")} / sum(sub_n), 9) AS cm
+           |  FROM (SELECT cluster, pos, vec_id % ${Folds.DefaultBuckets} AS sb, count(*) AS sub_n,
+           |        ${Folds.sortedSumSql("x")} AS sub_s
            |        FROM (SELECT vec_id, cluster, unnest(range(1, 9)) AS pos, unnest(e) AS x FROM $a)
            |        GROUP BY cluster, pos, sb)
            |  GROUP BY cluster, pos),
@@ -9068,9 +9068,9 @@ object Oracles {
          |  FROM (SELECT source, unnest($toks) AS token FROM documents) GROUP BY 1, 2),
          |t AS MATERIALIZED (SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
          |  count(*) AS q0, sum(CAST(c AS HUGEINT) * c) AS sc2 FROM cnt GROUP BY 1),
-         |h AS (SELECT source, list_reduce(list_sort(list(sub_s)), (a, b) -> a + b) AS h
-         |  FROM (SELECT source, ('0x' || substr(md5(token), 1, 4))::BIGINT % 1024 AS sb,
-         |        list_reduce(list_sort(list(term)), (a, b) -> a + b) AS sub_s
+         |h AS (SELECT source, ${Folds.sortedSumSql("sub_s")} AS h
+         |  FROM (SELECT source, ('0x' || substr(md5(token), 1, 4))::BIGINT % ${Folds.DefaultBuckets} AS sb,
+         |        ${Folds.sortedSumSql("term")} AS sub_s
          |        FROM (SELECT cnt.source, token,
          |          round((CAST(c AS DOUBLE) / n_tokens) * ln(CAST(n_tokens AS DOUBLE) / c), 9) AS term
          |          FROM cnt JOIN t USING (source))
@@ -9086,12 +9086,12 @@ object Oracles {
     "token_hits" -> {
       def aStep(hPrev: String, raw: String, out: String) =
         s"""$raw AS MATERIALIZED (SELECT dst AS token,
-           |  round(list_reduce(list_sort(list(round(w * h, 9))), (p, q) -> p + q), 9) AS a
+           |  round(${Folds.sortedSumSql("round(w * h, 9)")}, 9) AS a
            |  FROM ew JOIN $hPrev ON $hPrev.token = ew.src GROUP BY dst),
            |$out AS MATERIALIZED (SELECT token, round(a / (SELECT max(a) FROM $raw), 9) AS a FROM $raw)""".stripMargin
       def hStep(aPrev: String, raw: String, out: String) =
         s"""$raw AS MATERIALIZED (SELECT src AS token,
-           |  round(list_reduce(list_sort(list(round(w * a, 9))), (p, q) -> p + q), 9) AS h
+           |  round(${Folds.sortedSumSql("round(w * a, 9)")}, 9) AS h
            |  FROM ew JOIN $aPrev ON $aPrev.token = ew.dst GROUP BY src),
            |$out AS MATERIALIZED (SELECT token, round(h / (SELECT max(h) FROM $raw), 9) AS h FROM $raw)""".stripMargin
       s"""WITH t0 AS (SELECT $toks AS toks FROM documents WHERE len($toks) >= 2),
@@ -9118,11 +9118,11 @@ object Oracles {
     "poisson_trend" -> {
       def step(pPrev: String, s: String, out: String) =
         s"""$s AS (SELECT n_days, b0, b1,
-           |  list_reduce(list_sort(list(round(y - exp(b0 + b1 * t), 9))), (a, b) -> a + b) AS g0,
-           |  list_reduce(list_sort(list(round(t * (y - exp(b0 + b1 * t)), 9))), (a, b) -> a + b) AS g1,
-           |  list_reduce(list_sort(list(round(exp(b0 + b1 * t), 9))), (a, b) -> a + b) AS h00,
-           |  list_reduce(list_sort(list(round(t * exp(b0 + b1 * t), 9))), (a, b) -> a + b) AS h01,
-           |  list_reduce(list_sort(list(round(t * t * exp(b0 + b1 * t), 9))), (a, b) -> a + b) AS h11
+           |  ${Folds.sortedSumSql("round(y - exp(b0 + b1 * t), 9)")} AS g0,
+           |  ${Folds.sortedSumSql("round(t * (y - exp(b0 + b1 * t)), 9)")} AS g1,
+           |  ${Folds.sortedSumSql("round(exp(b0 + b1 * t), 9)")} AS h00,
+           |  ${Folds.sortedSumSql("round(t * exp(b0 + b1 * t), 9)")} AS h01,
+           |  ${Folds.sortedSumSql("round(t * t * exp(b0 + b1 * t), 9)")} AS h11
            |  FROM daily CROSS JOIN $pPrev GROUP BY 1, 2, 3),
            |$out AS (SELECT n_days,
            |  round(b0 + (h11 * g0 - h01 * g1) / (h00 * h11 - h01 * h01), 9) AS b0,
@@ -9151,11 +9151,11 @@ object Oracles {
            |  (SELECT ae, n, row_number() OVER (ORDER BY ae, day_idx) AS rn FROM r$i)
            |  WHERE rn = CAST(ceil(n / 2.0) AS BIGINT)),
            |s$i AS (SELECT n, s,
-           |  list_reduce(list_sort(list(w)), (a, b) -> a + b) AS sw,
-           |  list_reduce(list_sort(list(round(w * day_idx, 9))), (a, b) -> a + b) AS swx,
-           |  list_reduce(list_sort(list(round(w * day_idx * day_idx, 9))), (a, b) -> a + b) AS swxx,
-           |  list_reduce(list_sort(list(round(w * cents, 9))), (a, b) -> a + b) AS swy,
-           |  list_reduce(list_sort(list(round(w * day_idx * cents, 9))), (a, b) -> a + b) AS swxy
+           |  ${Folds.sortedSumSql("w")} AS sw,
+           |  ${Folds.sortedSumSql("round(w * day_idx, 9)")} AS swx,
+           |  ${Folds.sortedSumSql("round(w * day_idx * day_idx, 9)")} AS swxx,
+           |  ${Folds.sortedSumSql("round(w * cents, 9)")} AS swy,
+           |  ${Folds.sortedSumSql("round(w * day_idx * cents, 9)")} AS swxy
            |  FROM (SELECT n, s, day_idx, cents,
            |        round(CASE WHEN ae <= 1.345 * s THEN 1.0
            |              ELSE 1.345 * s / ae END, 9) AS w
@@ -9320,19 +9320,19 @@ object Oracles {
     // Jarque-Bera over 9dp ln terms, two-level doc_id-bucketed folds,
     // central-moment algebra written identically to the Spark side
     "jarque_bera" ->
-      """WITH t AS (SELECT lang, round(ln(CAST(n_chars AS DOUBLE)), 9) AS l,
-        |  doc_id % 1024 AS sb FROM documents WHERE n_chars > 0),
+      s"""WITH t AS (SELECT lang, round(ln(CAST(n_chars AS DOUBLE)), 9) AS l,
+        |  doc_id % ${Folds.DefaultBuckets} AS sb FROM documents WHERE n_chars > 0),
         |l1 AS (SELECT lang, sb, count(*) AS c,
-        |  list_reduce(list_sort(list(l)), (a, b) -> a + b) AS s1,
-        |  list_reduce(list_sort(list(l * l)), (a, b) -> a + b) AS s2,
-        |  list_reduce(list_sort(list(l * l * l)), (a, b) -> a + b) AS s3,
-        |  list_reduce(list_sort(list(l * l * l * l)), (a, b) -> a + b) AS s4
+        |  ${Folds.sortedSumSql("l")} AS s1,
+        |  ${Folds.sortedSumSql("l * l")} AS s2,
+        |  ${Folds.sortedSumSql("l * l * l")} AS s3,
+        |  ${Folds.sortedSumSql("l * l * l * l")} AS s4
         |  FROM t GROUP BY 1, 2),
         |m AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_docs,
-        |  list_reduce(list_sort(list(s1)), (a, b) -> a + b) AS s1,
-        |  list_reduce(list_sort(list(s2)), (a, b) -> a + b) AS s2,
-        |  list_reduce(list_sort(list(s3)), (a, b) -> a + b) AS s3,
-        |  list_reduce(list_sort(list(s4)), (a, b) -> a + b) AS s4
+        |  ${Folds.sortedSumSql("s1")} AS s1,
+        |  ${Folds.sortedSumSql("s2")} AS s2,
+        |  ${Folds.sortedSumSql("s3")} AS s3,
+        |  ${Folds.sortedSumSql("s4")} AS s4
         |  FROM l1 GROUP BY 1 HAVING sum(c) > 3),
         |f AS (SELECT lang, n_docs, CAST(n_docs AS DOUBLE) AS n,
         |  s1 / CAST(n_docs AS DOUBLE) AS mu, s2, s3, s4 FROM m),
@@ -9352,18 +9352,18 @@ object Oracles {
     // unbiased linear-kernel MMD^2: per-label vector sums / norm sums
     // via 9dp two-level folds, closed form assembled identically
     "embed_mmd" ->
-      """WITH base AS MATERIALIZED (SELECT CAST(label AS BIGINT) AS label, vec_id,
+      s"""WITH base AS MATERIALIZED (SELECT CAST(label AS BIGINT) AS label, vec_id,
         |  unnest(range(1, 9)) AS pos,
         |  unnest(list_transform(embedding[1:8], x -> CAST(x AS DOUBLE))) AS x
         |  FROM embeddings),
         |sums AS MATERIALIZED (SELECT label, pos,
-        |  round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 9) AS s
-        |  FROM (SELECT label, pos, vec_id % 1024 AS sb,
-        |        list_reduce(list_sort(list(round(x, 9))), (a, b) -> a + b) AS sub_s
+        |  round(${Folds.sortedSumSql("sub_s")}, 9) AS s
+        |  FROM (SELECT label, pos, vec_id % ${Folds.DefaultBuckets} AS sb,
+        |        ${Folds.sortedSumSql("round(x, 9)")} AS sub_s
         |        FROM base GROUP BY 1, 2, 3) GROUP BY 1, 2),
-        |qn AS (SELECT label, round(list_reduce(list_sort(list(sub_q)), (a, b) -> a + b), 9) AS q
-        |  FROM (SELECT label, vec_id % 1024 AS sb,
-        |        list_reduce(list_sort(list(round(x * x, 9))), (a, b) -> a + b) AS sub_q
+        |qn AS (SELECT label, round(${Folds.sortedSumSql("sub_q")}, 9) AS q
+        |  FROM (SELECT label, vec_id % ${Folds.DefaultBuckets} AS sb,
+        |        ${Folds.sortedSumSql("round(x * x, 9)")} AS sub_q
         |        FROM base GROUP BY 1, 2) GROUP BY 1),
         |counts AS (SELECT CAST(label AS BIGINT) AS label, count(*) AS n FROM embeddings GROUP BY 1),
         |dots AS MATERIALIZED (SELECT a.label AS label_a, b.label AS label_b,
@@ -9473,12 +9473,12 @@ object Oracles {
          |ec AS (SELECT la.label, count(*) AS e_c FROM half h
          |  JOIN l3 la ON la.token = h.a JOIN l3 lb ON lb.token = h.b
          |  WHERE la.label = lb.label GROUP BY 1),
-         |terms AS (SELECT ('0x' || substr(md5(dc.label), 1, 4))::BIGINT % 1024 AS sb,
+         |terms AS (SELECT ('0x' || substr(md5(dc.label), 1, 4))::BIGINT % ${Folds.DefaultBuckets} AS sb,
          |  round(CAST(coalesce(e_c, 0) AS DOUBLE) / m
          |    - (CAST(d_c AS DOUBLE) / (m * 2)) * (CAST(d_c AS DOUBLE) / (m * 2)), 9) AS term
          |  FROM dc LEFT JOIN ec USING (label) CROSS JOIN mm),
-         |qq AS (SELECT round(list_reduce(list_sort(list(sub_s)), (a, b) -> a + b), 6) AS modularity
-         |  FROM (SELECT sb, list_reduce(list_sort(list(term)), (a, b) -> a + b) AS sub_s
+         |qq AS (SELECT round(${Folds.sortedSumSql("sub_s")}, 6) AS modularity
+         |  FROM (SELECT sb, ${Folds.sortedSumSql("term")} AS sub_s
          |        FROM terms GROUP BY 1)),
          |c AS (SELECT count(*) AS n_nodes,
          |  CAST(count(DISTINCT label) AS BIGINT) AS n_communities FROM l3)

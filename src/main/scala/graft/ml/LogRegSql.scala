@@ -1,7 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.operators.Folds
 
 /** Deterministic batch-gradient-descent logistic regression, declarative
   * end to end (B85) — the from-scratch trainable-classifier twin of
@@ -34,9 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object LogRegSql {
 
-  private def sortedFold(c: Column): Column =
-    aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
-
   /** (i, w): learned weight per 1-based dimension after `iters` rounds. */
   def weights(emb: DataFrame, iters: Int = 3, lr: Double = 1.0): DataFrame =
     weightsOver(explodedFrame(emb), emb.agg(count(lit(1)).as("n_vecs")), iters, lr)
@@ -65,19 +64,15 @@ object LogRegSql {
     for (_ <- 1 to iters) {
       val z = cached.join(broadcast(w), "i")
         .select(col("vec_id"), col("y"), round(col("w") * col("x"), 9).as("c"))
-        .groupBy("vec_id", "y").agg(sortedFold(col("c")).as("z"))
+        .groupBy("vec_id", "y").agg(Folds.sortedSum(col("c")).as("z"))
       val err = z.select(col("vec_id"),
         (round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6) - col("y")).as("e"))
-      // two-level fold (operators/Folds): the per-dim gradient group holds
-      // ALL vectors — one-level collect_list would grow its aggregation
-      // buffer with the corpus (the exact embed_standardize OOM shape).
-      // Sub-bucket by vec_id % B, fold each sub-bucket sorted, fold the
-      // ≤B sub-totals sorted; O(group/B + B) state, oracle mirrors it.
-      val grad = cached.join(err, "vec_id")
-        .select(col("i"), graft.operators.Folds.subBucket(col("vec_id")),
-          round(col("e") * col("x"), 9).as("c"))
-        .groupBy("i", "sb").agg(sortedFold(col("c")).as("sub"))
-        .groupBy("i").agg(sortedFold(col("sub")).as("sc"))
+      // two-level fold (Folds.bucketedSums): the per-dim gradient group
+      // holds ALL vectors — one-level collect_list would grow its
+      // aggregation buffer with the corpus (the exact embed_standardize
+      // OOM shape); O(group/B + B) state, oracle mirrors it.
+      val grad = Folds.bucketedSums(cached.join(err, "vec_id"), Seq("i"), col("vec_id"),
+          "sc" -> round(col("e") * col("x"), 9))
         .crossJoin(broadcast(n))
         .select(col("i"), round(col("sc") / col("n_vecs"), 9).as("g"))
       w = w.join(grad, Seq("i"), "left")
@@ -101,7 +96,7 @@ object LogRegSql {
     cached
       .join(broadcast(wts), "i")
       .select(col("vec_id"), col("y"), round(col("w") * col("x"), 9).as("c"))
-      .groupBy("vec_id", "y").agg(sortedFold(col("c")).as("z"))
+      .groupBy("vec_id", "y").agg(Folds.sortedSum(col("c")).as("z"))
       .select(col("vec_id"), col("y"),
         round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 6).as("p"))
       .withColumn("pred", when(col("p") >= 0.5, 1.0).otherwise(0.0))

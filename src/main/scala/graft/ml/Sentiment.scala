@@ -6,7 +6,7 @@ import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer, SQLTransform
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{Folds, TextOps}
 
 /** The reference's classification surface, Spark-first (A12-A16).
   *
@@ -153,8 +153,6 @@ object Sentiment {
     // order is nondeterministic — sort the handful of per-class terms and
     // fold sequentially so the result is bit-stable (the oracle does the
     // same with list_sort + list_reduce)
-    def stableSum(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (acc, x) => acc + x)
     val out = perClass
       .crossJoin(broadcast(tot))
       .select(col("total"), col("correct"),
@@ -163,9 +161,9 @@ object Sentiment {
         (col("recall") * col("support") / col("total")).as("wr_part"))
       .agg(
         round(max(col("correct")).cast("double") / max(col("total")), 6).as("accuracy"),
-        round(stableSum(col("wp_part")), 6).as("weighted_precision"),
-        round(stableSum(col("wr_part")), 6).as("weighted_recall"),
-        round(stableSum(col("wf1_part")), 6).as("weighted_f1"))
+        round(Folds.sortedSum(col("wp_part")), 6).as("weighted_precision"),
+        round(Folds.sortedSum(col("wr_part")), 6).as("weighted_recall"),
+        round(Folds.sortedSum(col("wf1_part")), 6).as("weighted_f1"))
       .select("accuracy", "weighted_precision", "weighted_recall", "weighted_f1")
     graft.CacheTracker.track(
       out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

@@ -594,9 +594,7 @@ object Eval {
           - (col("sx").cast("double") / col("n_docs"))
             * (col("sx").cast("double") / col("n_docs"))).as("sd_raw"))
       .withColumn("w", round(col("n_docs") * col("sd_raw"), 9))
-    val tot = m.agg(
-      aggregate(sort_array(collect_list(col("w"))), lit(0.0),
-        (acc, x) => acc + x).as("w_tot"))
+    val tot = m.agg(Folds.sortedSum(col("w")).as("w_tot"))
     val exact = m.crossJoin(broadcast(tot))
       .withColumn("n_exact", lit(budget.toDouble) * col("w") / col("w_tot"))
       .withColumn("base", floor(col("n_exact")))
@@ -701,27 +699,21 @@ object Eval {
   def plattScaling(docs: DataFrame, steps: Int = 8): DataFrame = {
     val sc = scoreCounts(docs)
       .withColumn("n", col("n_pos") + col("n_neg"))
-      .withColumn("sb", round(col("score") * 1e6).cast("long") % 1024)
       .localCheckpoint(true)
-    def fold2(df: DataFrame, terms: Seq[(String, Column)]): DataFrame = {
-      val l1 = df.groupBy("sb")
-        .agg(Folds.sortedSum(terms.head._2).as(terms.head._1),
-          terms.tail.map { case (nm, c) => Folds.sortedSum(c).as(nm) }: _*)
-      l1.agg(Folds.sortedSum(col(terms.head._1)).as(terms.head._1),
-        terms.tail.map { case (nm, _) => Folds.sortedSum(col(nm)).as(nm) }: _*)
-    }
+    // sub-bucket id: the score as a 6 dp integer (sc has one row per score)
+    val scoreId = round(col("score") * 1e6).cast("long")
     val spark = docs.sparkSession
     var ab = spark.range(1).select(lit(0.0).as("a"), lit(0.0).as("b"))
       .localCheckpoint(true)
     for (_ <- 1 to steps) {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
       val withP = sc.crossJoin(broadcast(ab)).withColumn("p", p)
-      val s = fold2(withP, Seq(
-        ("ga", col("score") * (col("n") * col("p") - col("n_pos"))),
-        ("gb", col("n") * col("p") - col("n_pos")),
-        ("haa", col("n") * col("p") * (lit(1.0) - col("p")) * col("score") * col("score")),
-        ("hab", col("n") * col("p") * (lit(1.0) - col("p")) * col("score")),
-        ("hbb", col("n") * col("p") * (lit(1.0) - col("p")))))
+      val s = Folds.bucketedSums(withP, Nil, scoreId,
+        "ga" -> col("score") * (col("n") * col("p") - col("n_pos")),
+        "gb" -> (col("n") * col("p") - col("n_pos")),
+        "haa" -> col("n") * col("p") * (lit(1.0) - col("p")) * col("score") * col("score"),
+        "hab" -> col("n") * col("p") * (lit(1.0) - col("p")) * col("score"),
+        "hbb" -> col("n") * col("p") * (lit(1.0) - col("p")))
       // a singular Hessian (ONE distinct score — e.g. a constant
       // corpus) has no Newton step: keep (a, b) unchanged rather than
       // ANSI-throwing on the zero determinant
@@ -737,8 +729,8 @@ object Eval {
         .localCheckpoint(true)
     }
     val pF = lit(1.0) / (lit(1.0) + exp(-(col("a") * col("score") + col("b"))))
-    val nll = fold2(sc.crossJoin(broadcast(ab)).withColumn("p", pF), Seq(
-      ("nll", -(col("n_pos") * log(col("p")) + col("n_neg") * log(lit(1.0) - col("p"))))))
+    val nll = Folds.bucketedSums(sc.crossJoin(broadcast(ab)).withColumn("p", pF), Nil, scoreId,
+      "nll" -> -(col("n_pos") * log(col("p")) + col("n_neg") * log(lit(1.0) - col("p"))))
     ab.crossJoin(broadcast(nll))
       .select(lit(steps.toLong).as("n_steps"),
         round(col("a"), 6).as("a"), round(col("b"), 6).as("b"),

@@ -66,8 +66,7 @@ object Graph {
         .select(col("dst"),
           round(lit(d) * col("r") * col("w") / col("outw"), 9).as("c"))
       ranks = contrib.groupBy(col("dst"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("sum_c"))
+        .agg(round(Folds.sortedSum(col("c")), 9).as("sum_c"))
         .select(col("dst").as("token"),
           round((lit(1.0) - lit(d)) / lit(n) + col("sum_c"), 9)
             .as("r"))
@@ -384,14 +383,12 @@ object Graph {
       a = maxNorm(ew.join(h, ew("src") === h("token"))
         .select(col("dst"), round(col("w") * col("h"), 9).as("c"))
         .groupBy(col("dst").as("token"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("a")), "a")
+        .agg(round(Folds.sortedSum(col("c")), 9).as("a")), "a")
         .localCheckpoint(true)
       h = maxNorm(ew.join(a, ew("dst") === a("token"))
         .select(col("src"), round(col("w") * col("a"), 9).as("c"))
         .groupBy(col("src").as("token"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (acc, v) => acc + v), 9).as("h")), "h")
+        .agg(round(Folds.sortedSum(col("c")), 9).as("h")), "h")
         .localCheckpoint(true)
     }
     nodes
@@ -476,13 +473,13 @@ object Graph {
       .agg(count(lit(1)).as("d_c"), sum(col("x.intra")).as("e_c"))
     val terms = byLabel
       .crossJoin(broadcast(m))
-      .select(
-        expr("CAST(conv(substr(md5(label), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
+      .select(col("label"),
         round(col("e_c").cast("double") / col("m")
           - (col("d_c").cast("double") / (col("m") * 2))
             * (col("d_c").cast("double") / (col("m") * 2)), 9).as("term"))
-    val q = terms.groupBy("sb").agg(Folds.sortedSum(col("term")).as("sub_s"))
-      .agg(round(Folds.sortedSum(col("sub_s")), 6).as("modularity"))
+    val q = Folds.bucketedSums(terms, Nil,
+        expr("CAST(conv(substr(md5(label), 1, 4), 16, 10) AS BIGINT)"), "s" -> col("term"))
+      .select(round(col("s"), 6).as("modularity"))
     val counts = labels.agg(count(lit(1)).as("n_nodes"),
       countDistinct(col("label")).as("n_communities"))
     q.crossJoin(broadcast(m)).crossJoin(broadcast(counts))

@@ -73,8 +73,7 @@ object LangModel {
         round(col("tf") * log(col("cnt").cast("double") / col("total")), 6).as("contrib"))
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_tokens"),
-        aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x).as("s"))
+        Folds.sortedSum(col("contrib")).as("s"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("s"), 6).as("sum_logprob"),
         round(col("s") / col("n_tokens"), 6).as("avg_logprob"))
@@ -99,8 +98,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(first(col("n")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("entropy"))
+        round(Folds.sortedSum(col("contrib")), 6).as("entropy"))
 
   /** KL divergence of each language's token distribution from the corpus
     * distribution — the drift/mixture diagnostic for a multi-language
@@ -126,8 +124,7 @@ object LangModel {
       .groupBy("lang")
       .agg(first(col("tot_l")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("kl"))
+        round(Folds.sortedSum(col("contrib")), 6).as("kl"))
   }
 
   /** Pointwise mutual information over within-document token
@@ -192,8 +189,7 @@ object LangModel {
           .as("contrib"))
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_bigrams"),
-        aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, x) => acc + x).as("s"))
+        Folds.sortedSum(col("contrib")).as("s"))
       .select(col("doc_id"), col("n_bigrams"),
         round(col("s"), 6).as("sum_logprob"),
         round(col("s") / col("n_bigrams"), 6).as("avg_logprob"))
@@ -285,8 +281,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_bigrams"),
-        round(aggregate(sort_array(collect_list(col("logp"))), lit(0.0),
-          (acc, v) => acc + v), 6).as("sum_logp"))
+        round(Folds.sortedSum(col("logp")), 6).as("sum_logp"))
       .select(col("doc_id"), col("n_bigrams"), col("sum_logp"),
         round(-col("sum_logp") / col("n_bigrams"), 6).as("nll"))
   }
@@ -330,8 +325,7 @@ object LangModel {
     contrib.groupBy("doc_id")
       .agg(
         sum(col("tf")).as("n_tokens"),
-        round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-          (acc, v) => acc + v), 6).as("log_ratio"))
+        round(Folds.sortedSum(col("contrib")), 6).as("log_ratio"))
   }
 
   /** Reciprocal-rank fusion of two retrieval signals (B56): a BM25
@@ -395,8 +389,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_matched"),
-        round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-          (a, b) => a + b), 6).as("score"))
+        round(Folds.sortedSum(col("bm25")), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
 
@@ -441,8 +434,7 @@ object LangModel {
           .as("term"))
     ad.agg(
         max(when(col("d") === k, col("x"))).as("overlap_at_k"),
-        round(lit(1.0 - p) * aggregate(sort_array(collect_list(col("term"))),
-          lit(0.0), (acc, t) => acc + t), 6).as("rbo_trunc"))
+        round(lit(1.0 - p) * Folds.sortedSum(col("term")), 6).as("rbo_trunc"))
       .select(lit(k.toLong).as("k"), col("overlap_at_k"), col("rbo_trunc"))
   }
 
@@ -467,8 +459,7 @@ object LangModel {
     val feedback = weights
       .filter(col("token").isInCollection(query))
       .groupBy("doc_id")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("score"))
+      .agg(round(Folds.sortedSum(col("bm25")), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(fb)
       .select("doc_id")
@@ -480,8 +471,7 @@ object LangModel {
       .join(broadcast(feedback), "doc_id")
       .filter(!col("token").isInCollection(query))
       .groupBy("token")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("rsv"))
+      .agg(round(Folds.sortedSum(col("bm25")), 6).as("rsv"))
       .withColumn("rank", row_number().over(wExp).cast("long"))
       .filter(col("rank") <= k)
   }
@@ -512,8 +502,7 @@ object LangModel {
       .agg(count_distinct(col("token")).as("q_n")))
     val scores = bm25(docs).join(qdf, "token")
       .groupBy("query_id", "doc_id")
-      .agg(round(aggregate(sort_array(collect_list(col("bm25"))), lit(0.0),
-        (a, b) => a + b), 6).as("score"))
+      .agg(round(Folds.sortedSum(col("bm25")), 6).as("score"))
     val relv = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
       .join(qdf, "token")
       .groupBy("query_id", "doc_id")
@@ -530,8 +519,7 @@ object LangModel {
       round(rel.cast("double") / log((rnk + 1).cast("double")), 9)
     val dcg = topk
       .groupBy("query_id")
-      .agg(round(aggregate(sort_array(collect_list(dcgTerm(col("rel"), col("rnk")))),
-        lit(0.0), (a, b) => a + b), 6).as("dcg"))
+      .agg(round(Folds.sortedSum(dcgTerm(col("rel"), col("rnk"))), 6).as("dcg"))
     val mrr = topk.join(qn, "query_id")
       .groupBy("query_id")
       .agg(coalesce(round(lit(1.0) /
@@ -543,8 +531,7 @@ object LangModel {
       .withColumn("irnk", row_number().over(wI).cast("long"))
       .filter(col("irnk") <= k)
       .groupBy("query_id")
-      .agg(round(aggregate(sort_array(collect_list(dcgTerm(col("rel"), col("irnk")))),
-        lit(0.0), (a, b) => a + b), 6).as("idcg"))
+      .agg(round(Folds.sortedSum(dcgTerm(col("rel"), col("irnk"))), 6).as("idcg"))
     dcg.join(mrr, "query_id").join(idcg, "query_id")
       .select(col("query_id"), col("mrr"), col("dcg"), col("idcg"),
         round(col("dcg") / col("idcg"), 6).as("ndcg"))
@@ -558,16 +545,14 @@ object LangModel {
     * [[zipfSlope]] (which fits rank–frequency; this fits the
     * length–frequency law), 9 dp terms, 6 dp coefficients. */
   def zipfAbbreviation(docs: DataFrame): DataFrame = {
-    def fold(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     docs.select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .select(round(log(col("cnt").cast("double")), 9).as("x"),
         length(col("token")).cast("double").as("y"))
       .agg(count(lit(1)).as("n_tokens"),
-        fold(col("x")).as("sx"), fold(col("y")).as("sy"),
-        fold(round(col("x") * col("y"), 9)).as("sxy"),
-        fold(round(col("x") * col("x"), 9)).as("sxx"))
+        Folds.sortedSum(col("x")).as("sx"), Folds.sortedSum(col("y")).as("sy"),
+        Folds.sortedSum(round(col("x") * col("y"), 9)).as("sxy"),
+        Folds.sortedSum(round(col("x") * col("x"), 9)).as("sxx"))
       .filter(col("n_tokens") > 1
         && col("n_tokens") * col("sxx") - col("sx") * col("sx") =!= 0.0)
       .select(col("n_tokens"),
@@ -708,8 +693,6 @@ object LangModel {
     * the closed-form slope/intercept are partition-independent and
     * mirror the oracle exactly. */
   def zipfSlope(docs: DataFrame): DataFrame = {
-    def fold(c: org.apache.spark.sql.Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val cnt = docs.select(explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     // rank via the two-pass range-partitioned machinery: the vocabulary
@@ -724,9 +707,9 @@ object LangModel {
         round(log(col("cnt").cast("double")), 9).as("y"))
       .agg(
         count(lit(1)).as("n_tokens"),
-        fold(col("x")).as("sx"), fold(col("y")).as("sy"),
-        fold(round(col("x") * col("y"), 9)).as("sxy"),
-        fold(round(col("x") * col("x"), 9)).as("sxx"))
+        Folds.sortedSum(col("x")).as("sx"), Folds.sortedSum(col("y")).as("sy"),
+        Folds.sortedSum(round(col("x") * col("y"), 9)).as("sxy"),
+        Folds.sortedSum(round(col("x") * col("x"), 9)).as("sxx"))
       // a 1-token vocabulary has no rank spread: the OLS denominator is
       // exactly 0 and the slope undefined — emit nothing, loudly typed
       .filter(col("n_tokens") > 1)
@@ -753,8 +736,7 @@ object LangModel {
       .groupBy("source")
       .agg(first(col("n_docs")).as("n_docs"),
         count(lit(1)).as("n_langs"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("entropy"))
+        round(Folds.sortedSum(col("term")), 6).as("entropy"))
   }
 
   /** Token burstiness (B83): the index of dispersion (variance/mean) of
@@ -854,8 +836,7 @@ object LangModel {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("oov")).as("n_oov"),
-        round(aggregate(sort_array(collect_list(col("logp"))), lit(0.0),
-          (acc, x) => acc + x), 6).as("sum_logp"))
+        round(Folds.sortedSum(col("logp")), 6).as("sum_logp"))
       .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("sum_logp"),
         round(-col("sum_logp") / col("n_bigrams"), 6).as("nll"))
   }
@@ -948,8 +929,7 @@ object LangModel {
     val cW1 = cBig.groupBy("w1").agg(sum(col("c12")).as("c1"))
     val contrib = cBig.join(cW1, "w1")
       .select(
-        expr("CAST(conv(substr(md5(concat(w1, ' ', w2)), 1, 4), 16, 10) AS BIGINT) % 1024")
-          .as("sb"),
+        Folds.subBucket(expr("CAST(conv(substr(md5(concat(w1, ' ', w2)), 1, 4), 16, 10) AS BIGINT)")),
         col("c12"),
         round(col("c12") * log(col("c12").cast("double") / col("c1")), 6)
           .as("contrib"))
@@ -1039,7 +1019,7 @@ object LangModel {
     val tot = cnt.agg(sum(col("cnt")).as("total"))
     val contrib = sf.join(cnt, "token").crossJoin(broadcast(tot))
       .select(col("source"), col("tf"),
-        expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
+        Folds.subBucket(expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT)")),
         round(col("tf") * log(col("cnt").cast("double") / col("total")), 6)
           .as("contrib"))
     val dom = contrib
@@ -1292,20 +1272,15 @@ object LangModel {
             / (coalesce(col("cnt"), lit(0L)) + 1L).cast("double")), 6)
           .as("contrib"))
     val xent = terms.groupBy("m", "n_train")
-      .agg(round(aggregate(sort_array(collect_list(col("contrib"))), lit(0.0),
-        (acc, x) => acc + x), 6).as("heldout_xent"))
+      .agg(round(Folds.sortedSum(col("contrib")), 6).as("heldout_xent"))
     val pts = xent.select(col("m"), col("n_train"), col("heldout_xent"),
       log(col("n_train").cast("double")).as("x"))
     val mom = pts.agg(
       count(lit(1)).cast("double").as("kk"),
-      aggregate(sort_array(collect_list(col("x"))), lit(0.0),
-        (acc, x) => acc + x).as("sx"),
-      aggregate(sort_array(collect_list(col("heldout_xent"))), lit(0.0),
-        (acc, x) => acc + x).as("sy"),
-      aggregate(sort_array(collect_list(round(col("x") * col("heldout_xent"), 9))),
-        lit(0.0), (acc, x) => acc + x).as("sxy"),
-      aggregate(sort_array(collect_list(round(col("x") * col("x"), 9))),
-        lit(0.0), (acc, x) => acc + x).as("sxx"))
+      Folds.sortedSum(col("x")).as("sx"),
+      Folds.sortedSum(col("heldout_xent")).as("sy"),
+      Folds.sortedSum(round(col("x") * col("heldout_xent"), 9)).as("sxy"),
+      Folds.sortedSum(round(col("x") * col("x"), 9)).as("sxx"))
     val fit = mom.select(
       round((col("kk") * col("sxy") - col("sx") * col("sy"))
         / (col("kk") * col("sxx") - col("sx") * col("sx")), 6).as("loglog_slope"),
@@ -1351,10 +1326,8 @@ object LangModel {
         round(coalesce(col("c"), lit(0L)).cast("double") / col("tot"), 9).as("f"))
     val stats = grid.groupBy("token")
       .agg(count(lit(1)).as("ns"),
-        aggregate(sort_array(collect_list(col("f"))), lit(0.0),
-          (a, x) => a + x).as("sf"),
-        aggregate(sort_array(collect_list(col("f") * col("f"))), lit(0.0),
-          (a, x) => a + x).as("sf2"))
+        Folds.sortedSum(col("f")).as("sf"),
+        Folds.sortedSum(col("f") * col("f")).as("sf2"))
       .select(col("token"), (col("sf") / col("ns")).as("mu"),
         (col("sf2") / col("ns") - (col("sf") / col("ns")) * (col("sf") / col("ns")))
           .as("variance"))

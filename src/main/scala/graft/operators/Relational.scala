@@ -4153,18 +4153,13 @@ object Relational {
       .agg(sum(cents(col("o_totalprice"))).as("spend_cents"))
     val mu = perCust.agg(count(lit(1)).as("n"), sum(col("spend_cents")).as("tot"))
     val terms = perCust.crossJoin(broadcast(mu))
-      .select(col("o_custkey"), col("n"),
+      .select(col("o_custkey"), col("n").as("n_customers"),
         when(col("spend_cents") > 0L,
           round((col("spend_cents").cast("double") * col("n") / col("tot"))
             * log(col("spend_cents").cast("double") * col("n") / col("tot")), 9))
           .otherwise(lit(0.0)).as("t"))
-    terms
-      .groupBy(col("n"), Folds.subBucket(col("o_custkey")))
-      .agg(Folds.sortedSum(col("t")).as("sub_s"))
-      .groupBy("n")
-      .agg(Folds.sortedSum(col("sub_s")).as("s"))
-      .select(col("n").as("n_customers"),
-        round(col("s") / col("n"), 6).as("theil_t"))
+    Folds.bucketedSums(terms, Seq("n_customers"), col("o_custkey"), "s" -> col("t"))
+      .select(col("n_customers"), round(col("s") / col("n_customers"), 6).as("theil_t"))
   }
 
   /** Theil within/between decomposition by market segment (C237): the
@@ -4188,11 +4183,8 @@ object Relational {
           round((col("sc").cast("double") * col("n_g") / col("tot_g"))
             * log(col("sc").cast("double") * col("n_g") / col("tot_g")), 9))
           .otherwise(lit(0.0)).as("t"))
-    val within = terms
-      .groupBy(col("segment"), Folds.subBucket(col("o_custkey")))
-      .agg(Folds.sortedSum(col("t")).as("sub_s"))
-      .groupBy("segment")
-      .agg(Folds.sortedSum(col("sub_s")).as("s"))
+    val within = Folds.bucketedSums(terms, Seq("segment"), col("o_custkey"), "s" -> col("t"))
+      .select(col("segment"), col("s"))
     within.join(broadcast(segAgg), "segment").crossJoin(broadcast(tot))
       .select(col("segment"), col("n_g").as("n_customers"),
         round(col("tot_g").cast("double") / col("tot"), 6).as("spend_share"),

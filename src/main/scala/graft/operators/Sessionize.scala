@@ -513,9 +513,7 @@ object Sessionize {
         exp(-((col("us") - col("click_us")) / lit(1000000.0)) / lit(tauS)), 9))
     val perPurchase = Window.partitionBy("event_id")
     touches
-      .withColumn("denom", round(aggregate(
-        sort_array(collect_list(col("w")).over(perPurchase)),
-        lit(0.0), (a, b) => a + b), 9))
+      .withColumn("denom", round(Folds.sortedSum(col("w"), perPurchase), 9))
       .withColumn("att", round(col("cents") * col("w") / col("denom"), 4))
       .groupBy(expr("pmod(click_us div 3600000000, 24)").as("click_hour"))
       .agg(count(lit(1)).as("n_touches"),
@@ -863,10 +861,9 @@ object Sessionize {
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     // driver twins of the engine's numeric discipline: HALF_UP decimal
     // rounding (what Spark's round() does) and the ascending sorted fold
-    // (what aggregate(sort_array(collect_list)) does) — bit-identical
+    // (Folds.sortedSum) — bit-identical
     def rnd(x: Double, s: Int): Double =
       BigDecimal(x).setScale(s, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def fold(vs: Seq[Double]): Double = vs.sorted.foldLeft(0.0)(_ + _)
     // P(conv) within `steps` transitions under a given relabeled matrix:
     // chain the START mass vector, collecting each step's CONV arrivals
     def pconvClean(t: Seq[(String, String, Double)]): Double = {
@@ -878,11 +875,11 @@ object Sessionize {
           (src, dst, p) <- t if src == state
         } yield (dst, rnd(mass * p, 9))
         val stepped = m.groupBy(_._1)
-          .map { case (dst, ms) => dst -> rnd(fold(ms.map(_._2)), 9) }
+          .map { case (dst, ms) => dst -> rnd(Folds.sortedSum(ms.map(_._2)), 9) }
         stepped.get("CONV").foreach(conv += _)
         v = stepped - "CONV" - "NULL"
       }
-      rnd(fold(conv.result()), 9)
+      rnd(Folds.sortedSum(conv.result()), 9)
     }
     val base = pconvClean(trans.toSeq)
     val channels = Seq("view", "click", "error", "signup")
@@ -894,7 +891,7 @@ object Sessionize {
       val eff = if (base > 0) rnd(1.0 - removal / base, 6) else 0.0
       (c, base, removal, eff)
     }
-    val sumEff = rnd(fold(effects.map(_._4)), 9)
+    val sumEff = rnd(Folds.sortedSum(effects.map(_._4)), 9)
     val rows = effects.map { case (c, b, r, e) =>
       (c, b, r, e, if (sumEff > 0) rnd(e / sumEff, 6) else 0.0)
     }
@@ -980,8 +977,7 @@ object Sessionize {
           log(col("n_sessions").cast("double") / col("n_total")), 6).as("term"))
       .groupBy("n_total")
       .agg(count(lit(1)).as("n_paths"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("entropy"))
+        round(Folds.sortedSum(col("term")), 6).as("entropy"))
       .select(col("n_total").as("n_sessions"), col("n_paths"), col("entropy"),
         round(exp(col("entropy")), 6).as("perplexity"))
   }

@@ -504,17 +504,7 @@ object Similarity {
     var cent = vecs.filter(col("vec_id") < nCells)
       .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
     for (_ <- 1 to iters) {
-      // two-level fold (Folds): cell membership grows with the corpus
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
+      cent = meanVectors(assign(cent), col("e"), "cluster")
     }
     val assigned = assign(cent)
       .select(col("cluster"), col("vec_id").as("n_id"), col("embedding").as("n_emb"))
@@ -587,17 +577,30 @@ object Similarity {
     * shuffles, the second over the tiny (labels × dims × B) frame;
     * value bit-stable at any partitioning, oracle mirrors the same
     * two-level structure. */
-  def embedCentroids(emb: DataFrame): DataFrame =
-    emb.select(col("label"), col("vec_id"),
+  def embedCentroids(emb: DataFrame): DataFrame = {
+    val x = emb.select(col("label"), col("vec_id"),
         posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("label"), (col("pos") + 1).cast("long").as("dim"),
-        col("x").cast("double").as("x"), Folds.subBucket(col("vec_id")))
-      .groupBy("label", "dim", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-      .groupBy("label", "dim")
-      .agg(
-        sum(col("sub_n")).as("n_vecs"),
-        round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6).as("centroid"))
+      .select(col("label"), col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
+        col("x").cast("double").as("x"))
+    Folds.bucketedSums(x, Seq("label", "dim"), col("vec_id"), "s" -> col("x"))
+      .select(col("label"), col("dim"), col("n").as("n_vecs"),
+        round(col("s") / col("n"), 6).as("centroid"))
+  }
+
+  /** Per-`keys` mean vector `c` (9 dp per component) of the `vec` arrays
+    * of `df`'s rows: the recentering step of the Lloyd-style loops. The
+    * component sums are two-level folds ([[Folds.bucketedSums]] by
+    * vec_id), since a cell's membership grows with the corpus. */
+  private def meanVectors(df: DataFrame, vec: Column, keys: String*): DataFrame = {
+    val ks = keys.map(col)
+    Folds.bucketedSums(
+        df.select(ks :+ col("vec_id") :+ posexplode(vec).as(Seq("pos", "x")): _*),
+        keys :+ "pos", col("vec_id"), "s" -> col("x").cast("double"))
+      .select(ks :+ col("pos") :+ round(col("s") / col("n"), 9).as("cm"): _*)
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
+      .select(ks :+ transform(col("pc"), x => x.getField("cm")).as("c"): _*)
+  }
 
   /** SemDeDup-style semantic deduplication (B57): sign-LSH buckets stand
     * in for the k-means clusters of the paper (deterministic and
@@ -620,14 +623,10 @@ object Similarity {
     // two-level fold (Folds): a bucket's membership grows with the
     // corpus, so the per-(bucket, dim) mean must not collect every
     // member in one aggregation buffer — sub-bucket by vec_id % B first
-    val cent = b
-      .select(col("bucket"), col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("bucket"), col("pos"), Folds.subBucket(col("vec_id")),
-        col("x").cast("double").as("x"))
-      .groupBy("bucket", "pos", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-      .groupBy("bucket", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 6).as("c"))
+    val cent = Folds.bucketedSums(
+        b.select(col("bucket"), col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x"))),
+        Seq("bucket", "pos"), col("vec_id"), "s" -> col("x").cast("double"))
+      .select(col("bucket"), col("pos"), round(col("s") / col("n"), 6).as("c"))
       .groupBy("bucket")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("centroid"))
@@ -655,8 +654,6 @@ object Similarity {
     * every double is bit-identical to the DuckDB oracle. */
   def docSimilarity(docs: DataFrame, blockCol: String = "source",
                     simMin: Double = 0.8): DataFrame = {
-    def stableSum(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     // the weighted frame feeds three subtrees (norms + both join sides):
     // cache it so the TF-IDF pipeline runs once, not three times — the
     // cache is CacheTracker-scoped, released by the harness after use.
@@ -669,7 +666,7 @@ object Similarity {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     w.count()
     val norms = w.groupBy("doc_id")
-      .agg(sqrt(stableSum(col("tfidf") * col("tfidf"))).as("nrm"))
+      .agg(sqrt(Folds.sortedSum(col("tfidf") * col("tfidf"))).as("nrm"))
     val ids = w.select(col("blk"), col("token"), col("doc_id"))
     val cands = ids.select(col("blk"), col("token"), col("doc_id").as("a_id"))
       .join(ids.select(col("blk"), col("token"), col("doc_id").as("b_id")),
@@ -787,8 +784,6 @@ object Similarity {
   def docSimilarityPruned(docs: DataFrame, blockCol: String = "source",
                           simMin: Double = 0.8, maxDfFrac: Double = 0.5,
                           bypassFloor: Double = 0.05): DataFrame = {
-    def stableSum(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     // PERSISTED — the one operator where the recompute-beats-persist
     // streak (doc_lang_coherence / source_overlap / rrf_fusion, BASELINE
     // r8-r9) does NOT transfer, because the eager stats read below is a
@@ -837,7 +832,7 @@ object Similarity {
     val rareFrac = Option(sel.head().get(0))
       .map(_.asInstanceOf[Double]).getOrElse(1.0) // empty corpus → 0/0 → null
     val norms = w.groupBy("doc_id")
-      .agg(sqrt(stableSum(col("tfidf") * col("tfidf"))).as("nrm"))
+      .agg(sqrt(Folds.sortedSum(col("tfidf") * col("tfidf"))).as("nrm"))
     val cand =
       if (rareFrac < bypassFloor) {
         // Dense vocabulary (the measured worst case): the gate is
@@ -937,22 +932,13 @@ object Similarity {
       struct(lit(i.toLong).as("dim_i"), lit(j.toLong).as("dim_j"),
         element_at(col("embedding"), i).cast("double").as("x"),
         element_at(col("embedding"), j).cast("double").as("y"))
-    emb
-      .select(col("vec_id"), explode(array(cells: _*)).as("c"))
-      .select(col("c.dim_i"), col("c.dim_j"), col("c.x"), col("c.y"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("dim_i", "dim_j", "sb")
-      .agg(count(lit(1)).as("sub_n"),
-        Folds.sortedSum(col("x") * col("y")).as("sub_sxy"),
-        Folds.sortedSum(col("x")).as("sub_sx"),
-        Folds.sortedSum(col("y")).as("sub_sy"))
-      .groupBy("dim_i", "dim_j")
-      .agg(
-        sum(col("sub_n")).as("n_vecs"),
-        round(
-          Folds.sortedSum(col("sub_sxy")) / sum(col("sub_n"))
-            - (Folds.sortedSum(col("sub_sx")) / sum(col("sub_n")))
-            * (Folds.sortedSum(col("sub_sy")) / sum(col("sub_n"))), 6).as("cov"))
+    val xy = emb.select(col("vec_id"), explode(array(cells: _*)).as("c"))
+      .select(col("vec_id"), col("c.dim_i"), col("c.dim_j"), col("c.x"), col("c.y"))
+    Folds.bucketedSums(xy, Seq("dim_i", "dim_j"), col("vec_id"),
+        "sxy" -> col("x") * col("y"), "sx" -> col("x"), "sy" -> col("y"))
+      .select(col("dim_i"), col("dim_j"), col("n").as("n_vecs"),
+        round(col("sxy") / col("n") - (col("sx") / col("n")) * (col("sy") / col("n")), 6)
+          .as("cov"))
   }
 
   /** Hard-negative mining for contrastive training (B45): for each query
@@ -1052,11 +1038,8 @@ object Similarity {
       val w = C.join(v.select(col("dim"), col("v")), C("dim_j") === col("dim"))
         .select(col("dim_i"), round(col("cov") * col("v"), 9).as("c"))
         .groupBy(col("dim_i"))
-        .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (a, b) => a + b), 9).as("w"))
-      val nrm = round(sqrt(aggregate(
-        sort_array(collect_list(col("w") * col("w")).over(wFull)), lit(0.0),
-        (a, b) => a + b)), 9)
+        .agg(round(Folds.sortedSum(col("c")), 9).as("w"))
+      val nrm = round(sqrt(Folds.sortedSum(col("w") * col("w"), wFull)), 9)
       // a zero iterate (all-constant embeddings → zero covariance)
       // normalizes to the zero vector with eig 0 — never an ANSI
       // divide-by-zero throw
@@ -1173,18 +1156,7 @@ object Similarity {
     var cent = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
     for (_ <- 1 to iters) {
-      // two-level fold (Folds): cluster membership grows with the corpus;
-      // sub-bucket by vec_id % B so no buffer holds a whole cluster
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
+      cent = meanVectors(assign(cent), col("e"), "cluster")
         // k×dims rows: truncating the per-round lineage here keeps round
         // r's plan from re-embedding rounds 1..r-1 (the bradley_terry
         // localCheckpoint discipline — planning cost stays flat in iters)
@@ -1354,19 +1326,12 @@ object Similarity {
       posexplode(expr(
         s"transform(slice(embedding, 1, $dims), x -> CAST(x AS DOUBLE))"))
         .as(Seq("pos", "x")))
-    val sums = base
-      .select(col("label"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-      .groupBy("label", "pos", "sb")
-      .agg(Folds.sortedSum(round(col("x"), 9)).as("sub_s"))
-      .groupBy("label", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")), 9).as("s"))
-    val qn = base
-      .select(col("label"), Folds.subBucket(col("vec_id")),
-        round(col("x") * col("x"), 9).as("x2"))
-      .groupBy("label", "sb")
-      .agg(Folds.sortedSum(col("x2")).as("sub_q"))
-      .groupBy("label")
-      .agg(round(Folds.sortedSum(col("sub_q")), 9).as("q"))
+    val sums = Folds.bucketedSums(base, Seq("label", "pos"), col("vec_id"),
+        "s" -> round(col("x"), 9))
+      .select(col("label"), col("pos"), round(col("s"), 9).as("s"))
+    val qn = Folds.bucketedSums(base, Seq("label"), col("vec_id"),
+        "q" -> round(col("x") * col("x"), 9))
+      .select(col("label"), round(col("q"), 9).as("q"))
     val counts = emb.select(col("label").cast("long").as("label"))
       .groupBy("label").agg(count(lit(1)).as("n"))
     val perLabel = counts.join(qn, "label")
@@ -1414,8 +1379,7 @@ object Similarity {
           .as(Seq("pos", "x")))
     val cent = base.groupBy("label", "half", "pos")
       .agg(count(lit(1)).as("n"),
-        round(aggregate(sort_array(collect_list(col("x"))), lit(0.0),
-          (a, b) => a + b) / count(lit(1)), 9).as("c"))
+        round(Folds.sortedSum(col("x")) / count(lit(1)), 9).as("c"))
     val c0 = cent.filter(col("half") === 0)
       .select(col("label"), col("pos"), col("c").as("c0"), col("n").as("rows0"))
     val c1 = cent.filter(col("half") === 1)
@@ -1490,16 +1454,7 @@ object Similarity {
     var cent = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").cast("long").as("cluster"), col("e").as("c"))
     for (_ <- 1 to iters) {
-      cent = assign(cent)
-        .select(col("vec_id"), col("cluster"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("cluster"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("cluster"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("cluster"), transform(col("pc"), x => x.getField("cm")).as("c"))
+      cent = meanVectors(assign(cent), col("e"), "cluster")
     }
     val own = assign(cent).select(col("vec_id"), col("cluster").as("own_cluster"))
     val dAll = vecs.crossJoin(broadcast(cent))
@@ -1528,21 +1483,19 @@ object Similarity {
     * products and norms fold 9 dp-rounded terms over sorted lists, so
     * the score is partition-independent and oracle-exact. */
   def docLangCoherence(docs: DataFrame): DataFrame = {
-    def fold(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val w = TfIdf.tfidf(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
     val nl = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
     val cent = w.groupBy("lang", "token")
-      .agg(fold(col("tfidf")).as("s"))
+      .agg(Folds.sortedSum(col("tfidf")).as("s"))
       .join(broadcast(nl), "lang")
       .select(col("lang"), col("token"), round(col("s") / col("n_l"), 9).as("c"))
     val cnorm = cent.groupBy("lang")
-      .agg(sqrt(fold(round(col("c") * col("c"), 9))).as("c_nrm"))
+      .agg(sqrt(Folds.sortedSum(round(col("c") * col("c"), 9))).as("c_nrm"))
     val dots = w.join(broadcast(cent), Seq("lang", "token"))
       .groupBy("doc_id", "lang")
-      .agg(fold(round(col("tfidf") * col("c"), 9)).as("dot"),
-        sqrt(fold(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
+      .agg(Folds.sortedSum(round(col("tfidf") * col("c"), 9)).as("dot"),
+        sqrt(Folds.sortedSum(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
     dots.join(broadcast(cnorm), "lang")
       .select(col("doc_id"), col("lang"),
         round(col("dot") / (col("d_nrm") * col("c_nrm")), 6).as("coherence"))
@@ -1564,24 +1517,22 @@ object Similarity {
     * shared with each centroid and inflate the score of nearly-disjoint
     * candidates. The reported `cos` is the true cosine. */
   def nearestCentroidLang(docs: DataFrame): DataFrame = {
-    def fold(c: Column) =
-      aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
     val w = TfIdf.tfidf(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
     val nl = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
     val cent = w.groupBy("lang", "token")
-      .agg(fold(col("tfidf")).as("s"))
+      .agg(Folds.sortedSum(col("tfidf")).as("s"))
       .join(broadcast(nl), "lang")
       .select(col("lang").as("cand_lang"), col("token"),
         round(col("s") / col("n_l"), 9).as("c"))
     val cnorm = cent.groupBy("cand_lang")
-      .agg(sqrt(fold(round(col("c") * col("c"), 9))).as("c_nrm"))
+      .agg(sqrt(Folds.sortedSum(round(col("c") * col("c"), 9))).as("c_nrm"))
     val dnorm = w.groupBy("doc_id")
-      .agg(sqrt(fold(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
+      .agg(sqrt(Folds.sortedSum(round(col("tfidf") * col("tfidf"), 9))).as("d_nrm"))
     val scored = w.select(col("doc_id"), col("token"), col("tfidf"))
       .join(broadcast(cent), "token")
       .groupBy("doc_id", "cand_lang")
-      .agg(fold(round(col("tfidf") * col("c"), 9)).as("dot"))
+      .agg(Folds.sortedSum(round(col("tfidf") * col("c"), 9)).as("dot"))
       .join(dnorm, "doc_id")
       .join(broadcast(cnorm), "cand_lang")
       .select(col("doc_id"), col("cand_lang"),
@@ -1646,18 +1597,7 @@ object Similarity {
     var cent = vecs.filter(col("vec_id") < k)
       .select(col("sub"), col("vec_id").cast("long").as("code"), col("e").as("c"))
     for (_ <- 1 to iters) {
-      // two-level fold (Folds): a PQ cell's membership grows with the
-      // corpus — same sub-bucketed recentering as kmeansLloyd
-      cent = assign(cent)
-        .select(col("vec_id"), col("sub"), col("code"), posexplode(col("e")).as(Seq("pos", "x")))
-        .select(col("sub"), col("code"), col("pos"), Folds.subBucket(col("vec_id")), col("x"))
-        .groupBy(col("sub"), col("code"), col("pos"), col("sb"))
-        .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-        .groupBy("sub", "code")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-        .select(col("sub"), col("code"), transform(col("pc"), x => x.getField("cm")).as("c"))
+      cent = meanVectors(assign(cent), col("e"), "sub", "code")
     }
     (assign(cent), cent)
   }
@@ -1774,8 +1714,7 @@ object Similarity {
     x.crossJoin(jDim)
       .select(col("vec_id"), col("j"), (sign * col("x")).as("c"))
       .groupBy("vec_id", "j")
-      .agg(round(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-        (a, b) => a + b) / sqrt(lit(outDims.toDouble)), 9).as("y"))
+      .agg(round(Folds.sortedSum(col("c")) / sqrt(lit(outDims.toDouble)), 9).as("y"))
   }
 
   /** Per-dimension z-standardization of the embedding matrix (B66) —
@@ -1798,16 +1737,8 @@ object Similarity {
     val x = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
         col("x").cast("double").as("x"))
-    val stats = x.select(col("dim"), col("x"), Folds.subBucket(col("vec_id")))
-      .groupBy("dim", "sb")
-      .agg(count(lit(1)).as("sub_n"),
-        Folds.sortedSum(col("x")).as("sub_s"),
-        Folds.sortedSum(col("x") * col("x")).as("sub_ss"))
-      .groupBy("dim")
-      .agg(
-        sum(col("sub_n")).as("n"),
-        Folds.sortedSum(col("sub_s")).as("s"),
-        Folds.sortedSum(col("sub_ss")).as("ss"))
+    val stats = Folds.bucketedSums(x, Seq("dim"), col("vec_id"),
+        "s" -> col("x"), "ss" -> col("x") * col("x"))
       .select(col("dim"), (col("s") / col("n")).as("mean"),
         sqrt(col("ss") / col("n")
           - (col("s") / col("n")) * (col("s") / col("n"))).as("std"))
@@ -1818,10 +1749,8 @@ object Similarity {
       .groupBy("vec_id")
       .agg(
         count(lit(1)).as("n_dims"),
-        round(aggregate(sort_array(collect_list(col("z"))), lit(0.0),
-          (a, b) => a + b), 6).as("z_sum"),
-        round(sqrt(aggregate(sort_array(collect_list(col("z") * col("z"))), lit(0.0),
-          (a, b) => a + b)), 6).as("z_norm"))
+        round(Folds.sortedSum(col("z")), 6).as("z_sum"),
+        round(sqrt(Folds.sortedSum(col("z") * col("z"))), 6).as("z_norm"))
   }
 
   /** Greedy k-center coreset selection (B161): the farthest-point
@@ -1883,18 +1812,7 @@ object Similarity {
     * candidate explosion is ×labels (bounded); the argmin window
     * partitions on vec_id. */
   def labelNoise(emb: DataFrame): DataFrame = {
-    val cent = emb.select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("pos", "xf")))
-      .select(col("label"), col("pos"), Folds.subBucket(col("vec_id")),
-        col("xf").cast("double").as("x"))
-      .groupBy("label", "pos", "sb")
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("x")).as("sub_s"))
-      .groupBy("label", "pos")
-      .agg(round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("cm"))
-      .groupBy("label")
-      .agg(array_sort(collect_list(struct(col("pos"), col("cm")))).as("pc"))
-      .select(col("label").as("cand"),
-        transform(col("pc"), x => x.getField("cm")).as("c"))
+    val cent = meanVectors(emb, col("embedding"), "label").withColumnRenamed("label", "cand")
     val vecs = emb.select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
     val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cand"))
@@ -1988,19 +1906,14 @@ object Similarity {
       .select(col("vec_id"),
         graft.functions.GraftFunctions.unitNorm(col("embedding")).as("u"))
       .filter(col("u").isNotNull)
-    val perDim = unit
-      .select(col("vec_id"), posexplode(col("u")).as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"), col("x"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("dim", "sb").agg(Folds.sortedSum(col("x")).as("ss"))
-      .groupBy("dim").agg(Folds.sortedSum(col("ss")).as("s"))
+    val perDim = Folds.bucketedSums(
+      unit.select(col("vec_id"), posexplode(col("u")).as(Seq("pos", "x")))
+        .withColumn("dim", (col("pos") + 1).cast("long")),
+      Seq("dim"), col("vec_id"), "s" -> col("x"))
     val s2 = perDim.agg(Folds.sortedSum(col("s") * col("s")).as("norm_s2"))
-    val diag = unit
-      .select(col("vec_id"),
-        aggregate(col("u"), lit(0.0), (a, x) => a + x * x).as("uu"),
-        Folds.subBucket(col("vec_id")))
-      .groupBy("sb").agg(Folds.sortedSum(col("uu")).as("ss"))
-      .agg(Folds.sortedSum(col("ss")).as("q"))
+    val diag = Folds.bucketedSums(unit, Nil, col("vec_id"),
+        "q" -> aggregate(col("u"), lit(0.0), (a, x) => a + x * x))
+      .select(col("q"))
     val n = unit.agg(count(lit(1)).as("n_vecs"))
     n.crossJoin(broadcast(s2)).crossJoin(broadcast(diag))
       .select(col("n_vecs"),

@@ -399,18 +399,12 @@ object TextOps {
     * the two divisions are the only float steps after the folds. */
   def jarqueBera(docs: DataFrame): DataFrame = {
     val terms = docs.filter(col("n_chars") > 0)
-      .select(col("lang"), round(log(col("n_chars").cast("double")), 9).as("l"),
-        Folds.subBucket(col("doc_id")))
-    val l1 = terms.groupBy("lang", "sb")
-      .agg(count(lit(1)).as("c"),
-        Folds.sortedSum(col("l")).as("s1"),
-        Folds.sortedSum(col("l") * col("l")).as("s2"),
-        Folds.sortedSum(col("l") * col("l") * col("l")).as("s3"),
-        Folds.sortedSum(col("l") * col("l") * col("l") * col("l")).as("s4"))
-    val m = l1.groupBy("lang")
-      .agg(sum(col("c")).as("n_docs"),
-        Folds.sortedSum(col("s1")).as("s1"), Folds.sortedSum(col("s2")).as("s2"),
-        Folds.sortedSum(col("s3")).as("s3"), Folds.sortedSum(col("s4")).as("s4"))
+      .select(col("lang"), col("doc_id"),
+        round(log(col("n_chars").cast("double")), 9).as("l"))
+    val l = col("l")
+    val m = Folds.bucketedSums(terms, Seq("lang"), col("doc_id"),
+        "s1" -> l, "s2" -> l * l, "s3" -> l * l * l, "s4" -> l * l * l * l)
+      .withColumnRenamed("n", "n_docs")
       .filter(col("n_docs") > 3)
     val n = col("n_docs").cast("double")
     val mu = col("s1") / n
@@ -864,18 +858,15 @@ object TextOps {
     val totals = counts.groupBy("source")
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("q0"),
         sum(col("c").cast("decimal(38,0)") * col("c")).as("sc2"))
-    val h = counts.join(broadcast(totals.select(col("source"), col("n_tokens"))), "source")
-      .select(col("source"),
-        // md5 sub-bucket (the bigramCondEntropy discipline — DuckDB has
-        // no xxhash64); term is the all-non-negative p·ln(n/c) form so a
-        // singleton vocabulary can never emit IEEE -0.0
-        expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT) % 1024").as("sb"),
-        round((col("c").cast("double") / col("n_tokens"))
-          * log(col("n_tokens").cast("double") / col("c")), 9).as("term"))
-      .groupBy("source", "sb")
-      .agg(Folds.sortedSum(col("term")).as("sub_s"))
-      .groupBy("source")
-      .agg(Folds.sortedSum(col("sub_s")).as("h"))
+    // md5 sub-bucket id (the bigramCondEntropy discipline — DuckDB has
+    // no xxhash64); term is the all-non-negative p·ln(n/c) form so a
+    // singleton vocabulary can never emit IEEE -0.0
+    val h = Folds.bucketedSums(
+        counts.join(broadcast(totals.select(col("source"), col("n_tokens"))), "source"),
+        Seq("source"), expr("CAST(conv(substr(md5(token), 1, 4), 16, 10) AS BIGINT)"),
+        "h" -> round((col("c").cast("double") / col("n_tokens"))
+          * log(col("n_tokens").cast("double") / col("c")), 9))
+      .select(col("source"), col("h"))
     totals.join(h, "source")
       .select(col("source"), col("n_tokens"), col("q0"),
         round(exp(col("h")), 6).as("hill1"),
@@ -1564,9 +1555,7 @@ object TextOps {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
       .withColumn("w_raw", round(pow(col("n_tokens").cast("double"), alpha), 6))
-    val total = perSource.agg(
-      aggregate(sort_array(collect_list(col("w_raw"))), lit(0.0), (a, b) => a + b)
-        .as("w_total"))
+    val total = perSource.agg(Folds.sortedSum(col("w_raw")).as("w_total"))
     perSource.crossJoin(broadcast(total))
       .select(col("source"), col("n_docs"), col("n_tokens"),
         round(col("w_raw") / col("w_total"), 6).as("weight"),
@@ -1656,9 +1645,7 @@ object TextOps {
     * bit-identical to the oracle. Narrow scan + one partial-agg shuffle
     * onto |sources| rows. */
   def compressionRatio(docs: DataFrame): DataFrame = {
-    def stableMean(c: Column) =
-      round(aggregate(sort_array(collect_list(c)), lit(0.0), (a, b) => a + b)
-        / count(lit(1)), 6)
+    def stableMean(c: Column) = round(Folds.sortedSum(c) / count(lit(1)), 6)
     docs
       .select(col("source"),
         length(col("text")).cast("double").as("len"),
@@ -2556,8 +2543,7 @@ object TextOps {
           .as("term"),
         col("lang"), col("source"))
       .agg(
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, b) => a + b), 6).as("chi2"),
+        round(Folds.sortedSum(col("term")), 6).as("chi2"),
         ((count_distinct(col("lang")) - 1) * (count_distinct(col("source")) - 1))
           .as("dof"))
   }
@@ -3416,7 +3402,7 @@ object TextOps {
     * shards from different sources.
     *
     * Exactness: mean and population variance fold through the two-level
-    * [[Folds.subBucket]] pattern (strata grow with the corpus, so a
+    * [[Folds.bucketedSums]] (strata grow with the corpus, so a
     * one-level sorted fold's buffer would be data-sized), 9 dp at each
     * fold level; zero-variance strata emit z = 0, never NULL/NaN. Cost:
     * two partial-agg shuffles on the stratum key plus broadcast joins
@@ -3424,20 +3410,15 @@ object TextOps {
   def rewardNormalize(docs: DataFrame): DataFrame = {
     val scored = docs.select(col("doc_id"), col("lang"), col("source"),
       qualityComposite.as("quality"))
-    val m1 = scored
-      .groupBy(col("lang"), col("source"), Folds.subBucket(col("doc_id")))
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("quality")).as("sub_s"))
-      .groupBy("lang", "source")
-      .agg(sum(col("sub_n")).as("n_grp"),
-        round(Folds.sortedSum(col("sub_s")) / sum(col("sub_n")), 9).as("mean_q"))
+    val m1 = Folds.bucketedSums(scored, Seq("lang", "source"), col("doc_id"),
+        "s" -> col("quality"))
+      .select(col("lang"), col("source"), col("n").as("n_grp"),
+        round(col("s") / col("n"), 9).as("mean_q"))
     val dev = scored.join(broadcast(m1), Seq("lang", "source"))
       .withColumn("d2", round((col("quality") - col("mean_q"))
         * (col("quality") - col("mean_q")), 9))
-    val m2 = dev
-      .groupBy(col("lang"), col("source"), Folds.subBucket(col("doc_id")))
-      .agg(count(lit(1)).as("sub_n"), Folds.sortedSum(col("d2")).as("sub_d"))
-      .groupBy("lang", "source")
-      .agg(round(Folds.sortedSum(col("sub_d")) / sum(col("sub_n")), 9).as("var_q"))
+    val m2 = Folds.bucketedSums(dev, Seq("lang", "source"), col("doc_id"), "d" -> col("d2"))
+      .select(col("lang"), col("source"), round(col("d") / col("n"), 9).as("var_q"))
     dev.join(broadcast(m2), Seq("lang", "source"))
       .select(col("doc_id"), col("lang"), col("source"), col("quality"),
         when(col("var_q") > 0,

@@ -434,7 +434,6 @@ object TfIdf {
           .as("term"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"),
-        round(aggregate(sort_array(collect_list(col("term"))), lit(0.0),
-          (a, x) => a + x), 6).as("coherence"))
+        round(Folds.sortedSum(col("term")), 6).as("coherence"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextOps}
+import graft.operators.{Dedup, Folds, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Round-10 scale fixes: the two-level bit-stable fold (Folds.scala)
@@ -15,6 +15,26 @@ class FoldsSpec extends SparkSpec {
     (1L to n.toLong).map { i =>
       (i, Seq.fill(dims)(rnd.nextFloat() * 2 - 1), (i % 3).toInt)
     }.toDF("vec_id", "embedding", "label")
+  }
+
+  test("bucketedSums is the two-level sorted fold, bit for bit with its driver twin") {
+    val rnd = new scala.util.Random(3)
+    val rows = (0L until 5000L).map(i => (i % 3, i * 7919 % 100003, rnd.nextGaussian() * 1e3))
+    val df = rows.toDF("g", "id", "x")
+    val got = Folds.bucketedSums(df, Seq("g"), col("id"),
+        "s" -> col("x"), "s2" -> col("x") * col("x"))
+      .as[(Long, Long, Double, Double)].collect().sortBy(_._1).toSeq
+    val want = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rs) =>
+      val subs = rs.groupBy(_._2 % Folds.DefaultBuckets).values.toSeq
+      def twoLevel(f: Double => Double) =
+        Folds.sortedSum(subs.map(sb => Folds.sortedSum(sb.map(r => f(r._3)))))
+      (g, rs.size.toLong, twoLevel(identity), twoLevel(x => x * x))
+    }
+    assert(got === want)
+    // no keys: one global row
+    val global = Folds.bucketedSums(df, Nil, col("id"), "s" -> col("x"))
+      .as[(Long, Double)].collect().toSeq
+    assert(global.map(_._1) === Seq(5000L))
   }
 
   test("embedCentroids two-level fold matches the one-level sorted fold at 6 dp") {

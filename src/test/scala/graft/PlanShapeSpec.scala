@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards: pins the structural properties that make
@@ -370,5 +373,17 @@ class PlanShapeSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(shPlan.contains("ShuffledHashJoin"),
       s"shuffle_hash hint must force SHJ:\n${shPlan.take(600)}")
+  }
+
+  test("tfidf's executed plan reuses an exchange and tokenizes once") {
+    // the reuse only exists in the plan AQE finally ran, so read the
+    // write's own plan, not df.queryExecution (isFinalPlan=false there)
+    val p = ExplainExec.executedPlan(SparkEntry.queries("tfidf")(spark, sf))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val reused = aqe.collect(p) { case r: ReusedExchangeExec => r }
+    val generates = aqe.collect(p) { case g: GenerateExec => g }
+    assert(reused.nonEmpty, s"no ReusedExchange in the executed plan:\n$p")
+    assert(generates.size == 1,
+      s"${generates.size} tokenize Generates in the executed plan:\n$p")
   }
 }
